@@ -53,3 +53,33 @@ def test_checkpoint_resume(spark):
             .otherwise(F.col("clip_id")),
         )
         assert cv.verify_lineage(changed).count() > 0
+
+
+def test_checkpoint_read_failure_is_not_an_empty_checkpoint(spark):
+    """Only a missing checkpoint path means "nothing done": a checkpoint
+    that exists but cannot be read must fail the run, not revalidate the
+    finished buckets and append their rows a second time."""
+    import os
+
+    import pytest
+
+    clips = clips_df(spark, 400, seed=2, partitions=2)
+    with tempfile.TemporaryDirectory() as tmp:
+        path = f"{tmp}/ckpt"
+        cv = CheckpointedValidation(spark, path, n_buckets=8)
+        assert cv.completed_buckets() == set()  # missing path: empty
+        assert cv.run(clips, _fn, buckets_per_step=4, max_steps=1) == 1
+        n_rows = cv.report().count()
+        assert n_rows == 4
+
+        # inject a read failure: an unreadable file in the checkpoint
+        with open(os.path.join(path, "part-corrupt.parquet"), "wb") as f:
+            f.write(b"not a parquet file")
+        with pytest.raises(Exception):
+            cv.completed_buckets()
+        with pytest.raises(Exception):
+            cv.run(clips, _fn, buckets_per_step=4)
+
+        os.remove(os.path.join(path, "part-corrupt.parquet"))
+        assert cv.report().count() == n_rows  # nothing appended twice
+        assert len(cv.completed_buckets()) == 4

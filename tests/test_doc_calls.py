@@ -1,0 +1,113 @@
+"""Single-document ``Schema.__call__``: the cost contract (no Spark job per
+call, on every route) and parity of its errors with ``Schema.validate``
+over the same document as a one-row DataFrame."""
+
+import itertools
+
+import pytest
+
+from voluptuous_spark import (
+    Any, Coerce, Exclusive, In, Inclusive, Optional, Required, Schema,
+)
+from voluptuous_spark.exceptions import MultipleInvalid
+from voluptuous_spark.schema import _to_row_value
+from voluptuous_spark.suite import CLIPS_SCHEMA
+
+NESTED = Schema({
+    Required("utt_id"): str,
+    Required("segments"): [{
+        Required("start_ms"): Coerce(int),
+        Required("end_ms"): int,
+        Optional("speaker", default="unk"): str,
+    }],
+    Optional("lang", default="en"): str,
+})
+MIXED = Schema({Required("clip_id"): str, Required("tags"): [Any(int, str)]})
+FLAT_OK = {"clip_id": "c1", "sr_hz": 16000, "dur_ms": "480",
+           "codec": "wav", "transcript": "hello"}
+
+# (route, schema, valid document, invalid document)
+ROUTES = [
+    ("flat", CLIPS_SCHEMA, FLAT_OK, dict(FLAT_OK, codec="ogg")),
+    ("nested", NESTED,
+     {"utt_id": "u1", "segments": [{"start_ms": "5", "end_ms": 9}]},
+     {"utt_id": "u1", "segments": [{"start_ms": "5x", "end_ms": 9}]}),
+    ("driver", MIXED, {"clip_id": "c1", "tags": [1, "a"]},
+     {"clip_id": "c1", "tags": [1, "a", 2.5]}),
+    ("scalar", Schema(int), 5, "five"),
+    ("map", Schema({int: str}), {1: "a", 2: "b"}, {1: "a", 2: 3}),
+]
+_group = itertools.count()
+
+
+def _call_jobs(spark, schema, doc):
+    """(outcome, number of Spark jobs the call launched)."""
+    sc = spark.sparkContext
+    group = f"doc-call-{next(_group)}"
+    sc.setJobGroup(group, "single-document call")
+    try:
+        try:
+            outcome = ("ok", schema(doc))
+        except MultipleInvalid as e:
+            outcome = ("err", [str(x) for x in e.errors])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return outcome, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("route,schema,good,bad", ROUTES,
+                         ids=[r[0] for r in ROUTES])
+def test_call_launches_no_spark_job(spark, route, schema, good, bad):
+    for doc, want in ((good, "ok"), (bad, "err")):
+        outcome, jobs = _call_jobs(spark, schema, doc)
+        assert outcome[0] == want, (route, outcome)
+        assert jobs == 0, (route, want, jobs)
+
+
+def test_call_outputs_unchanged(spark):
+    assert CLIPS_SCHEMA(FLAT_OK) == dict(FLAT_OK, dur_ms=480)
+    assert NESTED({"utt_id": "u1", "segments": [
+        {"start_ms": "5", "end_ms": 9},
+        {"start_ms": "7", "end_ms": 12, "speaker": "b"},
+    ]}) == {"utt_id": "u1", "lang": "en", "segments": [
+        {"start_ms": 5, "end_ms": 9, "speaker": "unk"},
+        {"start_ms": 7, "end_ms": 12, "speaker": "b"},
+    ]}
+    assert MIXED({"clip_id": "c1", "tags": [1, "a"]}) == {
+        "clip_id": "c1", "tags": [1, "a"]}
+    assert Schema(int)(5) == 5
+    assert Schema({int: str})({1: "a", 2: "b"}) == {1: "a", 2: "b"}
+    assert Schema({"a": int})({}) == {}
+
+
+GROUPS = Schema({
+    "m": {Exclusive("a", "g"): int, Exclusive("b", "g"): int,
+          Inclusive("x", "h"): int, Inclusive("y", "h"): int},
+    Required("z"): str,
+})
+# (schema, document with several errors)
+MULTI_ERROR = [
+    # ' for dictionary value' context on every field error
+    (CLIPS_SCHEMA, {"clip_id": "", "sr_hz": 12345, "dur_ms": 0,
+                    "codec": "ogg", "transcript": " x"}),
+    (NESTED, {"utt_id": 7, "segments": [
+        {"start_ms": "1x", "end_ms": 2}, {"start_ms": "3", "end_ms": 5},
+        {"start_ms": "zz", "end_ms": 4}]}),
+    (GROUPS, {"m": {"a": 1, "b": 2}, "z": 3}),  # Exclusive group fires
+    (GROUPS, {"m": {"x": 1}, "z": 3}),  # Inclusive group fires
+    (Schema({Required("p"): In([1, 2]), Required("q"): int,
+             Required("r"): str}), {"p": 3}),  # value + missing keys
+]
+
+
+@pytest.mark.parametrize("schema,doc", MULTI_ERROR)
+def test_call_errors_match_validate_rendering(spark, schema, doc):
+    with pytest.raises(MultipleInvalid) as exc:
+        schema(doc)
+    got = [str(e) for e in exc.value.errors]
+
+    stype = schema._infer_doc_type(doc)
+    df = spark.createDataFrame([_to_row_value(doc, stype)], stype)
+    want = [r["rendered"] for r in
+            schema.validate(df).violations.select("rendered").collect()]
+    assert len(got) > 1 and got == want

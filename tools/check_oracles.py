@@ -2,7 +2,14 @@
 __spark_entry__.queries() entry and its DuckDB oracle at a given sf dir,
 compare row count + schema-agnostic sorted values.
 
-Usage: python tools/check_oracles.py [--strict] [sf_dir] [query ...]
+Usage: python tools/check_oracles.py [--strict] [--conf key=value ...]
+                                     [sf_dir] [query ...]
+
+--conf (repeatable) sets a Spark conf on the session, e.g. the
+mode-invariance pass that must agree with the default run:
+  --conf spark.sql.codegen.wholeStage=false
+  --conf spark.sql.codegen.factoryMode=NO_CODEGEN
+  --conf spark.sql.adaptive.enabled=false
 
 --strict additionally requires IDENTICAL pandas dtypes and exact values
 (no float rounding) after column-name sort — this replicates the driver's
@@ -65,15 +72,25 @@ def strict_compare(sdf: pd.DataFrame, odf: pd.DataFrame) -> str | None:
 
 
 def main():
-    args = [a for a in sys.argv[1:] if a != "--strict"]
-    strict = "--strict" in sys.argv[1:]
+    argv, conf = sys.argv[1:], {"spark.ui.enabled": "false"}
+    while "--conf" in argv:
+        i = argv.index("--conf")
+        key, eq, value = (argv[i + 1:i + 2] or [""])[0].partition("=")
+        if not (key and eq):
+            sys.exit("--conf needs key=value")
+        conf[key] = value
+        del argv[i:i + 2]
+    args = [a for a in argv if a != "--strict"]
+    strict = "--strict" in argv
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
 
     import __spark_entry__ as entry
     from voluptuous_spark.session import get_spark
 
-    spark = get_spark(extra_conf={"spark.ui.enabled": "false"})
+    spark = get_spark(extra_conf=conf)
+    for key in conf:
+        print(f"conf {key}={spark.conf.get(key)}")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

@@ -95,17 +95,19 @@ class CheckpointedValidation:
             .parquet(staging_path)
         )
 
-    def _staged(self, staging_path: str) -> bool:
-        """Commit-marker check through the Hadoop FileSystem API — a
+    def _exists(self, path: str) -> bool:
+        """Existence check through the Hadoop FileSystem API — a
         driver-local ``os.path.exists`` is always False for hdfs:///
-        s3a:// URIs, which would re-stage (full-table rewrite) on every
-        run of a cluster deployment, inverting the resume-I/O
-        guarantee."""
+        s3a:// URIs, which would re-stage (full-table rewrite) and
+        revalidate everything on every run of a cluster deployment,
+        inverting the resume-I/O guarantee."""
         sc = self.spark.sparkContext
-        jvm = sc._jvm
-        p = jvm.org.apache.hadoop.fs.Path(staging_path + "/_SUCCESS")
-        fs = p.getFileSystem(sc._jsc.hadoopConfiguration())
-        return bool(fs.exists(p))
+        p = sc._jvm.org.apache.hadoop.fs.Path(path)
+        return bool(p.getFileSystem(sc._jsc.hadoopConfiguration()).exists(p))
+
+    def _staged(self, staging_path: str) -> bool:
+        """Commit-marker check for a finished staging write."""
+        return self._exists(staging_path + "/_SUCCESS")
 
     def _bucketed_input(
         self, df: DataFrame | None, staging_path: str | None
@@ -122,17 +124,20 @@ class CheckpointedValidation:
         return self.spark.read.parquet(staging_path)
 
     def completed_buckets(self) -> set[int]:
-        try:
-            rows = (
-                self.spark.read.schema(CHECKPOINT_DDL)
-                .parquet(self.path)
-                .select("bucket")
-                .distinct()
-                .collect()
-            )
-            return {r["bucket"] for r in rows}
-        except Exception:
+        """Buckets with a checkpoint row. Only a missing checkpoint path
+        means nothing is done; any other read error propagates, because
+        treating it as "nothing done" would revalidate finished buckets
+        and append their checkpoint rows a second time."""
+        if not self._exists(self.path):
             return set()
+        rows = (
+            self.spark.read.schema(CHECKPOINT_DDL)
+            .parquet(self.path)
+            .select("bucket")
+            .distinct()
+            .collect()
+        )
+        return {r["bucket"] for r in rows}
 
     def pending_buckets(self) -> list[int]:
         done = self.completed_buckets()

@@ -24,6 +24,7 @@ Scale notes (10^12-row design):
 from __future__ import annotations
 
 import enum as _enum
+import functools
 import itertools
 import typing
 
@@ -32,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import dsl
+from . import exceptions as er
 from .dsl import (
     ALLOW_EXTRA,
     PREVENT_EXTRA,
@@ -76,13 +78,17 @@ class ValidationResult:
     """Outputs of ``Schema.validate``."""
 
     def __init__(self, annotated: DataFrame, id_cols: list[str],
-                 out_names: list[str], valid_df: DataFrame | None = None):
+                 out_names: list[str],
+                 valid_fn: typing.Callable[[], DataFrame] | None = None):
+        """``valid_fn`` builds ``valid`` on first access, so a caller that
+        reads only ``annotated`` (``Schema.__call__``) never constructs
+        and analyses a second plan."""
         self.annotated = annotated
         self._id_cols = id_cols
         self._out_names = out_names
-        self._valid_df = valid_df
+        self._valid_fn = valid_fn
 
-    @property
+    @functools.cached_property
     def valid(self) -> DataFrame:
         """Rows with zero violations, transformed (coerced/defaulted).
 
@@ -93,8 +99,8 @@ class ValidationResult:
         array_sort/array_compact lambdas block whole-stage codegen).
         Filtering on the plain boolean conjunction keeps the predicate
         inside codegen and evaluates each check exactly once."""
-        if self._valid_df is not None:
-            return self._valid_df
+        if self._valid_fn is not None:
+            return self._valid_fn()
         return (
             self.annotated.filter(F.size("__errors") == 0)
             .select(*self._out_names)
@@ -227,12 +233,17 @@ class Schema:
         """Validate ONE document exactly like the reference:
         ``schema(data)`` returns the transformed document or raises
         ``MultipleInvalid``. A driver-side compatibility shim over the
-        DataFrame engine (one-row DataFrame round-trip) so reference
-        callers can switch without code changes; for table scale use
-        ``validate(df)``."""
-        from pyspark.sql import SparkSession
+        DataFrame engine so reference callers can switch without code
+        changes; for table scale use ``validate(df)``.
 
-        from .exceptions import raise_if_invalid
+        The document rides as a one-row local relation (``_ride_one_row``)
+        whose outputs and errors come back in one collect that Spark
+        folds on the driver: a call launches no Spark job. The compiled
+        plan is cached per document shape, but Spark still analyses it on
+        every call. A document above
+        ``spark.sql.execution.arrow.localRelationThreshold`` rides as an
+        RDD instead and runs one job."""
+        from pyspark.sql import SparkSession
 
         spark = spark or SparkSession.getActiveSession()
         if spark is None:
@@ -242,8 +253,6 @@ class Schema:
         if isinstance(self.schema, type) and self.schema in (
             dict, list, tuple, set, frozenset,
         ):
-            from . import exceptions as er
-
             # bare container-TYPE schema (tests.md:73-99: Schema(dict) /
             # Schema(list) / Schema(tuple)): a driver-side isinstance
             # gate; the data passes through unchanged, so subclasses
@@ -254,8 +263,6 @@ class Schema:
                 "expected %s" % self.schema.__name__
             )])
         if isinstance(self.schema, (list, tuple)):
-            from . import exceptions as er
-
             # exact container-class gate (schema_builder.py:585-591): a
             # list schema takes lists only, a tuple schema tuples only
             seq_cls = list if isinstance(self.schema, list) else tuple
@@ -279,8 +286,6 @@ class Schema:
             # shapes): no ArrayType can carry it — validate element-wise
             # driver-side with the reference's exact sequence semantics
             # (each element rides the column engine individually)
-            from . import exceptions as er
-
             nv = _mixed_seq_verdict(
                 self.schema, data, required=self.required, extra=self.extra)
             if nv is not None:
@@ -353,8 +358,6 @@ class Schema:
         # _compile_object schema_builder.py:439)
         obj_originals: dict = {}
         if isinstance(self.schema, dict):
-            from . import exceptions as er
-
             for k, v in self.schema.items():
                 name = _key_name(k)
                 if not (isinstance(v, dsl.Object) and isinstance(name, str)):
@@ -385,19 +388,15 @@ class Schema:
             )
         _assert_representable(data)
         stype = self._infer_doc_type(data)
-        df = spark.createDataFrame([_to_row_value(data, stype)], stype)
-        res = self.validate(df, id_cols=[])
+        out, errs = _ride_one_row(self, _to_row_value(data, stype), stype,
+                                  spark)
         if driver_res:
-            _merge_driver_resolutions(res, driver_res, doc_order)
             # the merge is the pass/fail authority here: ride errors at
-            # resolved paths are placeholder artifacts, so the row may be
-            # flagged failed (and absent from .valid) while the document
-            # is valid — read the transformed outputs off .annotated
-            rows = res.annotated.select(*res._out_names).collect()
-        else:
-            raise_if_invalid(res)
-            rows = res.valid.collect()
-        out = rows[0].asDict(recursive=True)
+            # resolved paths are placeholder artifacts, so the row may
+            # carry errors while the document is valid
+            _merge_driver_resolutions(errs, driver_res, doc_order)
+        elif errs:
+            raise er.MultipleInvalid([er.invalid_from_row(e) for e in errs])
         if isinstance(self.schema, dict):
             _strip_removed(out, self.schema)
         for p, kind, payload in driver_res:
@@ -424,8 +423,6 @@ class Schema:
         ``Literal`` deep-compare dicts; ``Msg``/``All``/``Schema`` re-enter
         the compiler with the document). Driver-side — the dict engine
         flow assumes a mapping schema."""
-        from . import exceptions as er
-
         node = self.schema
         if isinstance(node, Schema):
             return type(self)(
@@ -482,8 +479,6 @@ class Schema:
         Engine-wide divergence note applies: a None value is an absent
         key in column land, so ``Schema(int)(None)`` reports 'required
         key not provided' rather than the reference's 'expected int'."""
-        from . import exceptions as er
-
         if isinstance(self.schema, dict):
             raise er.MultipleInvalid(
                 [er.DictInvalid("expected a dictionary")]
@@ -623,8 +618,6 @@ class Schema:
         Entry order survives the round trip (Spark's ArrayBasedMapData
         keeps construction order), matching the reference's
         order-preservation guarantee."""
-        from pyspark.sql import functions as F
-
         key_kinds = {bool if isinstance(k, bool) else type(k)
                      for k in data}
         scalar_keys = all(
@@ -650,21 +643,17 @@ class Schema:
         stype = T.StructType(
             [T.StructField("__doc__", T.MapType(kt, vt), True)]
         )
-        df = spark.createDataFrame([(dict(data),)], stype)
-        res = Schema(
+        carrier = Schema(
             {"__doc__": self.schema}, required=self.required,
             extra=self.extra,
-        ).validate(df, id_cols=[])
-        # strip the carrier column from error paths, and restore numeric
-        # key components to their Python type so str(exc) renders
-        # data[5.0], not data['5.0']
-        rows = res.violations.withColumn(
-            "path", F.slice(F.col("path"), 2, 1_000_000)
-        ).limit(1000).collect()
+        )
+        row, rows = _ride_one_row(carrier, (dict(data),), stype, spark)
         if rows:
-            from . import exceptions as er
-
-            errs = [er.invalid_from_row(r) for r in rows]
+            # strip the carrier column from error paths, and restore
+            # numeric key components to their Python type so str(exc)
+            # renders data[5.0], not data['5.0']
+            errs = [er.invalid_from_row({**r, "path": (r["path"] or [])[1:]})
+                    for r in rows]
             if isinstance(kt, (T.DoubleType, T.FloatType)):
                 for e in errs:
                     e._path = [
@@ -674,7 +663,6 @@ class Schema:
                         for p in e._path
                     ]
             raise er.MultipleInvalid(errs)
-        row = res.valid.collect()[0]
         out = dict(row["__doc__"] or {})
         if set(out) == set(data):
             # Spark's map collect does not guarantee entry order; when
@@ -696,8 +684,6 @@ class Schema:
         engine's Object-over-struct path via a one-key carrier so errors
         carry the reference's 'object value' ctx. Returns
         ``type(data)(**out)`` like the reference."""
-        from . import exceptions as er
-
         obj = self.schema
         if obj.cls is not dsl.UNDEFINED and not isinstance(data, obj.cls):
             raise er.MultipleInvalid([er.ObjectInvalid(
@@ -825,8 +811,6 @@ class Schema:
         key error is surfaced instead of 'extra keys not allowed' under
         PREVENT, schema_builder.py:385-396)."""
         import re as _re2
-
-        from . import exceptions as er
 
         if key_schema is dsl.Extra or isinstance(key_schema, dsl.Extra):
             return ("ok", name)
@@ -1066,8 +1050,6 @@ class Schema:
                 return 3
 
             wildcards.sort(key=_prio)
-            from . import exceptions as er
-
             matched_wild_ids: set[int] = set()
             for cname in struct.fieldNames():
                 if cname in declared:
@@ -1168,12 +1150,7 @@ class Schema:
         )
         cached = self._compiled_cache.get(memo_key)
         if cached is not None:
-            stage1, selection, out_names, fail_any, valid_sel = cached
-            annotated = df.select(*stage1).select(*selection)
-            valid_df = df.select(*stage1).filter(~fail_any).select(*valid_sel)
-            return ValidationResult(
-                annotated, list(id_cols), out_names, valid_df
-            )
+            return _result(df, cached, id_cols)
 
         if isinstance(self.schema, dsl.Any):
             # root-level Any over mapping branches: wrap the row in one
@@ -1197,14 +1174,10 @@ class Schema:
             fail_any = F.size(F.col("__ea_root")) > 0
             valid_sel = [_fcol(c).alias(c) for c in df.columns]
             out_names = list(df.columns)
-            self._compiled_cache[memo_key] = (
+            self._compiled_cache[memo_key] = compiled = (
                 stage1, selection, out_names, fail_any, valid_sel,
             )
-            annotated = df.select(*stage1).select(*selection)
-            valid_df = df.select(*stage1).filter(~fail_any).select(*valid_sel)
-            return ValidationResult(
-                annotated, list(id_cols), out_names, valid_df
-            )
+            return _result(df, compiled, id_cols)
 
         fields, declared, complex_req = self._bind_fields(df.schema)
         by_name = {f.name: f.dataType for f in df.schema.fields}
@@ -1834,16 +1807,11 @@ class Schema:
             + [expr.alias(name) for name, expr in out_cols.items()]
         )
         stage1 = [F.col("*")] + hidden  # unbound: reusable across DataFrames
-        self._compiled_cache[memo_key] = (
+        self._compiled_cache[memo_key] = compiled = (
             stage1, selection, list(keep_ids) + list(out_cols),
             fail_any, valid_sel,
         )
-        annotated = df.select(*stage1).select(*selection)
-        valid_df = df.select(*stage1).filter(~fail_any).select(*valid_sel)
-        return ValidationResult(
-            annotated, list(id_cols), list(keep_ids) + list(out_cols),
-            valid_df,
-        )
+        return _result(df, compiled, id_cols)
 
     def _validate_map(self, col: Column, dtype: T.MapType,
                       prefix: tuple[str, ...]):
@@ -3554,8 +3522,6 @@ def _driver_validate_sequence(alternatives, data, spark,
     aborts immediately (schema_builder.py:620-623); otherwise the LAST
     alternative's error is kept per failing element. Returns the
     transformed element list."""
-    from . import exceptions as er
-
     out = []
     errors = []
     for i, value in enumerate(data):
@@ -3607,8 +3573,6 @@ def _mixed_seq_verdict(node, v, required=False, extra=PREVENT_EXTRA):
     ``('accept', out)``, ``('error', [Invalid])`` with element-relative
     paths, or None (unknown — the documented static-typing divergence
     keeps applying)."""
-    from . import exceptions as er
-
     spark = None  # engine rides fetch the active session themselves
     while isinstance(node, Schema):
         required, extra = node.required, node.extra
@@ -3727,8 +3691,6 @@ def _driver_match_key(skey, key, spark):
             eq = False
         return eq, key, None
     if isinstance(skey, dsl.Validator):
-        from . import exceptions as er
-
         try:
             return True, Schema(skey)(key, spark), None
         except er.MultipleInvalid as e:
@@ -3736,8 +3698,6 @@ def _driver_match_key(skey, key, spark):
         except Exception:
             return False, None, None
     if callable(skey):
-        from . import exceptions as er
-
         try:
             return True, skey(key), None
         except er.Invalid as e:
@@ -3775,8 +3735,6 @@ class _DriverMappingMixin:
     column engine individually via a nested ``Schema(...)`` call."""
 
     def _driver_validate_mapping(self, data: dict, spark) -> dict:
-        from . import exceptions as er
-
         smap = self.schema
 
         # Exclusive/Inclusive group checks run BEFORE any value
@@ -3993,8 +3951,6 @@ def _class_value_verdict(node, v):
     can hold it, but membership/equality checks compare driver-side
     exactly like the reference (``In``/``NotIn`` just use ``in``,
     validators.py:842-846/874-878)."""
-    from . import exceptions as er
-
     while isinstance(node, Schema):
         node = node.schema
     if isinstance(node, dsl.Marker):
@@ -4067,8 +4023,6 @@ def _resolve_driver_values(schema_dict, data, extra_policy, root_schema,
     in cleaned_data unchanged — the documented static-typing divergences
     keep applying to exactly those.
     """
-    from . import exceptions as er
-
     res = []
 
     def level_bails(smap):
@@ -4288,11 +4242,43 @@ def _resolve_driver_values(schema_dict, data, extra_policy, root_schema,
     return cleaned, res
 
 
-def _merge_driver_resolutions(result, driver_res, doc_order=None,
-                              limit: int = 1000):
-    """Raise MultipleInvalid combining ride violations with driver-side
-    resolutions (reference order: value errors in DATA-key iteration
-    order, then missing-required — schema_builder.py:360-405). Ride
+def _result(df: DataFrame, compiled: tuple, id_cols) -> ValidationResult:
+    """Apply a compiled selection (``Schema.validate``) to ``df``."""
+    stage1, selection, out_names, fail_any, valid_sel = compiled
+    return ValidationResult(
+        df.select(*stage1).select(*selection), list(id_cols), out_names,
+        lambda: df.select(*stage1).filter(~fail_any).select(*valid_sel),
+    )
+
+
+def _ride_one_row(schema, row: tuple, stype: T.StructType, spark):
+    """Validate one document row with ``schema`` and return its
+    transformed outputs (a dict) and its ``__errors`` structs in violation
+    order, capped at 1000 like ``raise_if_invalid``. The row rides as an
+    Arrow batch, which Spark turns into a driver-local ``LocalRelation``
+    below ``spark.sql.execution.arrow.localRelationThreshold``, so the
+    compiled plan folds on the driver and the one collect launches no
+    job."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if stype.fields:
+        aschema = to_arrow_schema(stype)
+        df = spark.createDataFrame(pa.Table.from_arrays(
+            [pa.array([v], type=f.type) for v, f in zip(row, aschema)],
+            schema=aschema), stype)
+    else:  # Arrow cannot carry a row without columns
+        df = spark.sql("VALUES (1)").select()
+    out = (schema.validate(df).annotated.collect()[0]
+           .asDict(recursive=True))
+    return out, out.pop("__errors")[:1000]
+
+
+def _merge_driver_resolutions(errs, driver_res, doc_order=None):
+    """Raise MultipleInvalid combining ride violations (the ``__errors``
+    structs of ``_ride_one_row``) with driver-side resolutions (reference
+    order: value errors in DATA-key iteration order, then
+    missing-required — schema_builder.py:360-405). Ride
     errors at resolved paths are artifacts of the key's placeholder
     removal (the required probe, or an injected marker default validated
     in the real value's place) and are dropped — the driver verdict is
@@ -4301,8 +4287,7 @@ def _merge_driver_resolutions(result, driver_res, doc_order=None,
                              MultipleInvalid, RequiredFieldInvalid,
                              VirtualPathComponent, invalid_from_row)
 
-    rows = result.violations.limit(limit).collect()
-    ride = [invalid_from_row(r) for r in rows]
+    ride = [invalid_from_row(r) for r in errs]
     resolved = {p for (p, _k, _pl) in driver_res}
 
     def _artifact(e):
@@ -4722,8 +4707,6 @@ def validate(*a, **kw):
       needs an active SparkSession.
     """
     from functools import wraps
-
-    from . import exceptions as er
 
     RETURNS_KEY = "__return__"
     return_schema = kw.pop(RETURNS_KEY, None)

@@ -7,7 +7,56 @@ import os
 from pyspark.sql import SparkSession
 
 
-_DRIVER_MEM = os.environ.get("SPARK_DRIVER_MEMORY", "24g")
+_GB = 1 << 30
+# preferred sizes on a large host; a smaller host clamps both to a share
+# of its memory so the JVM can start at all
+_HEAP_TARGET = 24 * _GB
+_OFFHEAP_TARGET = 16 * _GB
+
+
+def _host_memory_bytes() -> int | None:
+    """Physical memory, or the cgroup (v2 or v1) limit when that is
+    lower; None when neither can be read."""
+    sizes = []
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    sizes.append(int(line.split()[1]) * 1024)
+    except OSError:
+        pass
+    for path in ("/sys/fs/cgroup/memory.max",
+                 "/sys/fs/cgroup/memory/memory.limit_in_bytes"):
+        try:
+            with open(path) as f:
+                sizes.append(int(f.read().strip()))
+        except (OSError, ValueError):  # absent, or "max"
+            pass
+    return min(sizes) if sizes else None
+
+
+def _memory_settings() -> tuple[str, str, str]:
+    """(driver heap, off-heap size, heap JVM flags). The env overrides
+    ``SPARK_DRIVER_MEMORY`` / ``SPARK_OFFHEAP_MEMORY`` are taken as given,
+    with Xms=Xmx pre-touched as before. Otherwise the heap is at most 50%
+    and the off-heap at most 15% of host memory, and the heap is
+    pre-touched only when the full 24g target fits under that cap:
+    pre-faulting half of a small host's memory would starve everything
+    else on it."""
+    heap = os.environ.get("SPARK_DRIVER_MEMORY")
+    offheap = os.environ.get("SPARK_OFFHEAP_MEMORY")
+    host = _host_memory_bytes() or 4 * _HEAP_TARGET
+    pretouch = heap is not None
+    if heap is None:
+        heap_b = min(_HEAP_TARGET, host // 2)
+        pretouch = heap_b == _HEAP_TARGET
+        heap = f"{heap_b >> 20}m"
+    if offheap is None:
+        offheap = f"{min(_OFFHEAP_TARGET, host * 15 // 100) >> 20}m"
+    flags = "-XX:G1HeapRegionSize=32m"
+    if pretouch:
+        flags = f"-Xms{heap} {flags} -XX:+AlwaysPreTouch"
+    return heap, offheap, flags
 
 
 def get_spark(
@@ -33,6 +82,7 @@ def get_spark(
         b = b.master(master)
     elif not SparkSession.getActiveSession():
         b = b.master(f"local[{cpus}]")
+    driver_mem, offheap_mem, heap_flags = _memory_settings()
     conf = {
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -79,7 +129,7 @@ def get_spark(
         # local mode: the driver heap IS the executor heap; 32 concurrent
         # tasks each buffering multi-MB audio batches need real headroom
         # (8g produced GCLocker allocation stalls at local[32])
-        "spark.driver.memory": _DRIVER_MEM,
+        "spark.driver.memory": driver_mem,
         # Binary-column scans: the vectorized reader's default 4096-row
         # columnar batch over 30-300KB audio payloads is a 100MB+ on-heap
         # array — a G1 "humongous" allocation at any region size. At 32
@@ -88,10 +138,10 @@ def get_spark(
         # (~2-18MB depending on clip length) + 32MB G1 regions keep every
         # batch a regular allocation (measured on 85KB-avg clips: warm scan
         # 2.3s at 512 rows vs 1.8s at 64, and 5x less first-run jitter).
-        # Xms=Xmx + AlwaysPreTouch pre-faults the heap once — this VM's
-        # kernel page-fault path is expensive (sys time 6x user time
-        # measured), so faulting pages at allocation time serializes the
-        # executors.
+        # Xms=Xmx + AlwaysPreTouch (where _memory_settings applies it)
+        # pre-faults the heap once — a VM kernel page-fault path was
+        # measured expensive (sys time 6x user time), so faulting pages at
+        # allocation time serializes the executors.
         "spark.sql.parquet.columnarReaderBatchSize": "64",
         # Off-heap column vectors: binary audio batches are decoded into
         # unsafe memory instead of byte[] churn in the G1 young gen —
@@ -100,10 +150,8 @@ def get_spark(
         # the standard config for scan-heavy executors.
         "spark.sql.columnVector.offheap.enabled": "true",
         "spark.memory.offHeap.enabled": "true",
-        "spark.memory.offHeap.size":
-            os.environ.get("SPARK_OFFHEAP_MEMORY", "16g"),
-        "spark.driver.extraJavaOptions":
-            f"-Xms{_DRIVER_MEM} -XX:G1HeapRegionSize=32m -XX:+AlwaysPreTouch",
+        "spark.memory.offHeap.size": offheap_mem,
+        "spark.driver.extraJavaOptions": heap_flags,
         # cluster deployments: the same flags go on the executors
         "spark.executor.extraJavaOptions":
             "-XX:G1HeapRegionSize=32m -XX:+AlwaysPreTouch",
