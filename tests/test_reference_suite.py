@@ -96,7 +96,8 @@ def _collect():
     return cases
 
 
-_CASES = _collect()
+# collected only when the checkout exists, like the sibling parity suites
+_CASES = _collect() if os.path.exists(REF_TESTS) else []
 
 
 @pytest.fixture()

@@ -20,12 +20,14 @@ strict but passes the lenient compare).
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# import the checkout this script lives in, not an installed copy
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",

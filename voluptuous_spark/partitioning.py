@@ -1,11 +1,11 @@
-"""Deterministic range bucketing shared by the ordered-scan helpers.
+"""Deterministic range bucketing for ``textops._dense_ranks``.
 
 ``repartitionByRange`` draws its range bounds from a reservoir sample
 taken PER JOB — two jobs over the same frame can disagree on which
-partition a row lands in, so call sites that pair a per-partition
-offsets job with a consuming job (dense ranks, ECDF cumsums) had to
+partition a row lands in, so a caller that pairs a per-partition
+offsets job with a consuming job (the dense-rank dictionary) had to
 ``.cache()`` the repartitioned frame for bound consistency. Nothing
-ever unpersisted those caches: in a long-lived session (the bench runs
+ever unpersisted that cache: in a long-lived session (the bench runs
 the whole suite in one) cached corpus-scale partitions accumulate
 until eviction pressure — at 10^12 rows, a cluster-memory incident.
 
@@ -58,9 +58,9 @@ def range_pid_expr(col, bounds: list):
     pid = count of bounds strictly below ``col`` (0..len(bounds)), so
     bucket i holds values in (bounds[i-1], bounds[i]] and ascending pid
     = ascending value range — per-bucket local order + per-bucket
-    offsets reconstructs the global order, the property the dense-rank
-    and cumsum helpers need. NULLs land in bucket 0 (they sort first,
-    matching the window's default null ordering)."""
+    offsets reconstructs the global order, the property dense ranks
+    need. NULLs land in bucket 0 (they sort first, matching the window's
+    default null ordering)."""
     if not bounds:
         return F.lit(0)
     e = None

@@ -22,8 +22,13 @@ from that cached skinny table. Without this, each of the 8 outputs would
 re-scan the table and re-decode the audio.
 
 Shuffle budget (SURVEY.md §4.3): row+content = 0, uniqueness = 1,
-referential = 1 (0 when broadcast), PSI/KS = 1 hash agg each
-(low-cardinality skew absorbed by map-side partial agg; see checks/drift).
+referential = 1 (0 when broadcast), PSI = 1 hash agg (low-cardinality
+skew absorbed by map-side partial agg; see checks/drift), KS = 1 hash agg
+plus one single-task fold over the distinct values.
+
+Job budget: ``run_suite`` itself launches NO Spark job — every output,
+the exact KS included, is a lazy plan forced by ``violations.count()`` /
+``SuiteResult.counts()`` (tests/test_drift.py pins the 0).
 """
 
 from __future__ import annotations
@@ -72,10 +77,13 @@ class SuiteResult:
     dur_ks: DataFrame
 
     def counts(self) -> dict:
-        """Materialize every table-level output. The independent aggregate
-        jobs are submitted CONCURRENTLY (Spark schedules them together and
-        packs tasks); serializing ~8 small jobs would add ~one scheduler
-        latency each, which at small scale dominates wall time."""
+        """Materialize every table-level output. The six independent
+        actions are submitted CONCURRENTLY (Spark schedules them together
+        and packs tasks); serializing them would add ~one scheduler
+        latency each, which at small scale dominates wall time. With AQE
+        each shuffle stage is its own job: on 4k clips with transcripts
+        the six actions run 20 Spark jobs (the KS is one action: one
+        hash-agg shuffle, then a single-task fold)."""
         from concurrent.futures import ThreadPoolExecutor
 
         jobs = {
