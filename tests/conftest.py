@@ -1,6 +1,10 @@
+import itertools
+
 import pytest
 
 from voluptuous_spark.session import get_spark
+
+_job_group = itertools.count()
 
 
 @pytest.fixture(scope="session")
@@ -14,6 +18,23 @@ def spark():
         },
     )
     yield s
+
+
+@pytest.fixture(scope="session")
+def jobs_of(spark):
+    """fn -> (fn's result, number of Spark jobs launched while it ran)."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"counted-{next(_job_group)}"
+        sc.setJobGroup(group, "counted call")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
 
 
 @pytest.fixture(scope="session")

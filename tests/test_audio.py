@@ -5,12 +5,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from voluptuous_spark.audio import (
+    PCM_ERR_COL,
     decode_wav_numpy,
     decode_wav_reference,
     encode_wav_pcm16,
-    pcm_check_column,
     snr_db,
     transcript_equality_violations,
+    with_pcm_check,
 )
 from voluptuous_spark.datasynth import clips_df, transcripts_df
 from voluptuous_spark.suite import run_suite
@@ -74,7 +75,7 @@ def test_synth_determinism(spark):
 
 
 def test_pcm_check_flags_corrupted(spark, clips):
-    checked = clips.withColumn("pcm_err", pcm_check_column())
+    checked = with_pcm_check(clips).withColumnRenamed(PCM_ERR_COL, "pcm_err")
     bad = {
         r["clip_id"]: r["pcm_err"]
         for r in checked.filter(F.col("pcm_err").isNotNull()).collect()
@@ -187,10 +188,11 @@ def test_pcm_expr_matches_arrow_decoder(spark, clips):
     every fixture row — including every injected corruption class."""
     from voluptuous_spark.audio import pcm_check_expr
 
-    both = clips.select(
-        "clip_id",
-        pcm_check_expr().alias("jvm_err"),
-        pcm_check_column().alias("py_err"),
+    both = with_pcm_check(
+        clips.select("clip_id", "bytes", "sr_hz", "dur_ms", "codec",
+                     pcm_check_expr().alias("jvm_err"))
+    ).select(
+        "clip_id", "jvm_err", F.col(PCM_ERR_COL).alias("py_err")
     ).collect()
     assert len(both) == N
     diffs = [

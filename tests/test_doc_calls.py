@@ -2,8 +2,6 @@
 call, on every route) and parity of its errors with ``Schema.validate``
 over the same document as a one-row DataFrame."""
 
-import itertools
-
 import pytest
 
 from voluptuous_spark import (
@@ -37,29 +35,20 @@ ROUTES = [
     ("scalar", Schema(int), 5, "five"),
     ("map", Schema({int: str}), {1: "a", 2: "b"}, {1: "a", 2: 3}),
 ]
-_group = itertools.count()
 
 
-def _call_jobs(spark, schema, doc):
-    """(outcome, number of Spark jobs the call launched)."""
-    sc = spark.sparkContext
-    group = f"doc-call-{next(_group)}"
-    sc.setJobGroup(group, "single-document call")
+def _outcome(schema, doc):
     try:
-        try:
-            outcome = ("ok", schema(doc))
-        except MultipleInvalid as e:
-            outcome = ("err", [str(x) for x in e.errors])
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return outcome, len(sc.statusTracker().getJobIdsForGroup(group))
+        return ("ok", schema(doc))
+    except MultipleInvalid as e:
+        return ("err", [str(x) for x in e.errors])
 
 
 @pytest.mark.parametrize("route,schema,good,bad", ROUTES,
                          ids=[r[0] for r in ROUTES])
-def test_call_launches_no_spark_job(spark, route, schema, good, bad):
+def test_call_launches_no_spark_job(jobs_of, route, schema, good, bad):
     for doc, want in ((good, "ok"), (bad, "err")):
-        outcome, jobs = _call_jobs(spark, schema, doc)
+        outcome, jobs = jobs_of(lambda: _outcome(schema, doc))
         assert outcome[0] == want, (route, outcome)
         assert jobs == 0, (route, want, jobs)
 

@@ -2,7 +2,6 @@
 pure-Python KS, and the build-time job budget of the KS and of
 ``suite.run_suite`` (no Spark job until an output is forced)."""
 
-import itertools
 import random
 import zlib
 from bisect import bisect_right
@@ -12,8 +11,6 @@ import pytest
 from voluptuous_spark.checks.drift import ks_statistic
 from voluptuous_spark.datasynth import clips_df, transcripts_df
 from voluptuous_spark.suite import run_suite
-
-_group = itertools.count()
 
 
 def _py_ks(a, b):
@@ -27,18 +24,6 @@ def _py_ks(a, b):
         abs(bisect_right(a, x) / len(a) - bisect_right(b, x) / len(b))
         for x in a + b
     )
-
-
-def _jobs(spark, fn):
-    """(fn's result, number of Spark jobs launched while it ran)."""
-    sc = spark.sparkContext
-    group = f"drift-build-{next(_group)}"
-    sc.setJobGroup(group, "plan construction")
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 _rng = random.Random(7)
@@ -60,21 +45,21 @@ CASES = [
 
 
 @pytest.mark.parametrize("name,a,b,ddl", CASES, ids=[c[0] for c in CASES])
-def test_ks_equals_python_ks(spark, name, a, b, ddl):
+def test_ks_equals_python_ks(spark, jobs_of, name, a, b, ddl):
     da = spark.createDataFrame([(x,) for x in a], f"x {ddl}")
     db = spark.createDataFrame([(x,) for x in b], f"x {ddl}")
-    out, jobs = _jobs(spark, lambda: ks_statistic(da, db, "x"))
+    out, jobs = jobs_of(lambda: ks_statistic(da, db, "x"))
     assert jobs == 0, (name, jobs)
     rows = out.collect()
     assert len(rows) == 1
     assert rows[0]["ks_stat"] == _py_ks(a, b), name
 
 
-def test_run_suite_builds_no_job(spark):
+def test_run_suite_builds_no_job(spark, jobs_of):
     n = 400
     clips = clips_df(spark, n, seed=3, partitions=2)
     transcripts = transcripts_df(spark, n, seed=3, partitions=2)
-    res, jobs = _jobs(spark, lambda: run_suite(clips, transcripts))
+    res, jobs = jobs_of(lambda: run_suite(clips, transcripts))
     try:
         assert jobs == 0, jobs
         rows = res.annotated.select("clip_id", "dur_ms").collect()

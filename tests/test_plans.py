@@ -293,9 +293,9 @@ def test_no_cached_rdds_survive_completed_calls(spark):
     # round-4 verdict #3: the three internal .cache() sites
     # (ngram_jaccard_pairs' shingle table, _dense_ranks' dictionary,
     # _ordered_cumsum's ECDF input) leaked corpus-scale caches for the
-    # life of the session. All three are gone — deterministic literal
-    # range bounds / ReusedExchange replace them — so a completed call
-    # must leave NOTHING in the persistent-RDD registry.
+    # life of the session. All three are gone — lazy single plans and
+    # ReusedExchange replace them — so a completed call must leave
+    # NOTHING in the persistent-RDD registry.
     from voluptuous_spark.checks.drift import ks_statistic
     from voluptuous_spark.textops import (
         minhash_signatures, ngram_jaccard_pairs, shingle_ranks,

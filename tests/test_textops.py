@@ -9,11 +9,13 @@ from voluptuous_spark.similarity import (
     lsh_topk,
 )
 from voluptuous_spark.textops import (
+    _dense_ranks,
     exact_duplicates,
     language_id,
     minhash_lsh_candidates,
     ngram_jaccard_pairs,
     quality_score,
+    shingle_ranks,
     simhash,
     token_count,
 )
@@ -257,6 +259,30 @@ def test_minhash_basis_modes_agree_on_dups(docs):
             for r in minhash_lsh_candidates(docs, basis=basis).collect()
         }
         assert (0, 1) in cands and (0, 6) in cands, basis
+
+
+@pytest.mark.parametrize("values", [
+    ["pear", "apple", "fig", "apple", "pear", "Zebra", "fig", "apple"],
+    ["only"],
+    [],
+], ids=["repeats", "single", "empty"])
+def test_dense_ranks_match_python(spark, values):
+    df = spark.createDataFrame([(v,) for v in values], "w string")
+    got = {r["w"]: r["rank"] for r in _dense_ranks(df, "w").collect()}
+    assert got == {v: i + 1 for i, v in enumerate(sorted(set(values)))}
+
+
+@pytest.mark.parametrize("build", [
+    lambda d: shingle_ranks(d, basis="ranked"),
+    lambda d: simhash(d, basis="ranked"),
+    lambda d: minhash_lsh_candidates(d, basis="ranked"),
+], ids=["shingle_ranks", "simhash", "minhash_lsh_candidates"])
+def test_ranked_basis_builds_without_jobs(jobs_of, docs, build):
+    # the rank dictionary is one lazy sort: building the plan launches no
+    # Spark job (no driver-side bound sampling or offset collects)
+    out, jobs = jobs_of(lambda: build(docs))
+    assert jobs == 0
+    assert out.count() > 0
 
 
 def test_simhash_hashed_mode(docs):

@@ -90,6 +90,13 @@ def main():
     import __spark_entry__ as entry
     from voluptuous_spark.session import get_spark
 
+    qs, oracles = entry.queries(), entry.oracle_sql()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        sys.exit(f"unknown query: {', '.join(unknown)}")
+    if only:
+        qs = {name: fn for name, fn in qs.items() if name in only}
+
     spark = get_spark(extra_conf=conf)
     for key in conf:
         print(f"conf {key}={spark.conf.get(key)}")
@@ -100,11 +107,8 @@ def main():
             f"read_parquet('{sf_dir}/{t}.parquet')"
         )
 
-    qs, oracles = entry.queries(), entry.oracle_sql()
     failures = []
     for name, fn in qs.items():
-        if only and name not in only:
-            continue
         try:
             sdf = fn(spark, sf_dir).toPandas()
         except Exception as e:

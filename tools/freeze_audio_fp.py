@@ -3,15 +3,17 @@ of the deterministic oracle clip fixture, frozen into the
 audio_near_dups DuckDB oracle so the driver gate can replay the banded
 LSH join in pure SQL while Spark runs the real decode->FFT->LSH path.
 
-Usage: PYTHONPATH=/root/repo python tools/freeze_audio_fp.py
+Usage: python tools/freeze_audio_fp.py
 Paste the printed literal over _AFP_FROZEN in entry_ext3.py whenever the
 fixture (datasynth.oracle_clips_df) or the fingerprint parameters
 (audio_fingerprints defaults) change.
 """
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+# import the checkout this script lives in, not an installed copy
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
 def main() -> None:

@@ -30,9 +30,12 @@ from __future__ import annotations
 
 import random
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
+# import the checkout this script lives in, not an installed copy
+_ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(_ROOT))
+sys.path.insert(0, str(_ROOT / "tests"))
 
 # -- value pools -------------------------------------------------------------
 

@@ -1,4 +1,4 @@
-"""Audio (WAV/PCM16) content validators as Arrow-batch pandas UDFs.
+"""Audio (WAV/PCM16) content validators over binary clip columns.
 
 North-star requirement (BASELINE.json input_hint): per-row invariant =
 decoded-PCM allclose (SNR >= 30 dB) against a reference decode + transcript
@@ -13,11 +13,13 @@ compressed codecs (flac/opus/mp3) would slot into ``_decode_reference``
 behind the same interface; in this sandbox they're structurally validated
 only (header magic + declared-length consistency).
 
-Execution model: ONE pandas UDF over (bytes, sr_hz, dur_ms) per batch —
-Arrow transfer, numpy loops over samples, zero per-row Python in Spark's
-row pipeline. Batch size is bounded by
-spark.sql.execution.arrow.maxRecordsPerBatch (session.py) so binary
-payload batches fit executor memory.
+Execution model: the PCM verdict has one JVM path, ``pcm_check_expr`` (a
+Column of header arithmetic, no payload crosses into Python), and one
+reference path, ``with_pcm_check`` (a ``mapInArrow`` pass running both
+decoders in numpy over zero-copy Arrow buffers). The signal-feature,
+fingerprint and segment passes use the same ``mapInArrow`` shape. Batch
+size is bounded by spark.sql.execution.arrow.maxRecordsPerBatch
+(session.py) so binary payload batches fit executor memory.
 """
 
 from __future__ import annotations
@@ -27,7 +29,6 @@ import struct
 import wave
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
@@ -96,54 +97,6 @@ def decode_wav_reference(buf: bytes):
             raise ValueError("unsupported encoding")
         frames = w.readframes(w.getnframes())
         return np.frombuffer(frames, dtype="<i2"), w.getframerate()
-
-
-class _MemIO(io.RawIOBase):
-    """Zero-copy seekable reader over a memoryview.
-
-    ``io.BytesIO(mv)`` copies the whole payload up front; this wrapper
-    lets the stdlib ``wave`` parser read straight out of the Arrow buffer
-    instead. With 32 workers streaming ~100KB clips the avoided
-    write+read-back is pure DRAM-bus headroom — the resource that caps
-    N->4N scaling on one socket.
-    """
-
-    __slots__ = ("_mv", "_pos")
-
-    def __init__(self, mv):
-        # Arrow-buffer memoryviews may carry a signed format code;
-        # readinto's slice assignment needs matching 'B' layouts
-        self._mv = mv if mv.format == "B" else mv.cast("B")
-        self._pos = 0
-
-    def readable(self):
-        return True
-
-    def seekable(self):
-        return True
-
-    def seek(self, pos, whence=0):
-        if whence == 0:
-            self._pos = pos
-        elif whence == 1:
-            self._pos += pos
-        else:
-            self._pos = len(self._mv) + pos
-        return self._pos
-
-    def tell(self):
-        return self._pos
-
-    def readinto(self, b):
-        n = min(len(b), len(self._mv) - self._pos)
-        b[:n] = self._mv[self._pos:self._pos + n]
-        self._pos += n
-        return n
-
-
-# 32768 frames = 64KB chunks: the reference-decode compare streams through
-# L2 instead of materializing a second full payload copy
-_CMP_CHUNK_FRAMES = 32768
 
 
 def _walk_riff(mv) -> tuple[int, int, int]:
@@ -264,44 +217,6 @@ def _check_one(buf, sr_hz, dur_ms, codec) -> str | None:
     return None
 
 
-def pcm_check_column(
-    bytes_col: str = "bytes",
-    sr_col: str = "sr_hz",
-    dur_col: str = "dur_ms",
-    codec_col: str = "codec",
-) -> Column:
-    """Error-message Column (NULL = valid) from an Arrow-batched pandas UDF
-    over (bytes, sr_hz, dur_ms, codec). Plug into Schema.validate via
-    ``extra_checks`` with error_type 'ValueInvalid' (the reference's
-    catch-all for callable validators, schema_builder.py:803-805).
-
-    NOTE: measured on this box, the scalar-pandas-UDF write path degrades
-    badly on wide binary columns at high task concurrency (JVM ArrowWriter
-    value-copy contention: 0.45s at local[8] vs 2.3-10s at local[32] for
-    the same job). Prefer ``with_pcm_check`` (mapInArrow) in anything
-    performance-sensitive; this column form is kept for composability.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(StringType())
-    def _pcm_udf(
-        b: pd.Series, sr: pd.Series, dur: pd.Series, codec: pd.Series
-    ) -> pd.Series:
-        out = []
-        for buf, s, d, c in zip(b, sr, dur, codec):
-            out.append(
-                _check_one(
-                    buf,
-                    None if pd.isna(s) else int(s),
-                    None if pd.isna(d) else int(d),
-                    None if (c is None or (isinstance(c, float) and pd.isna(c))) else c,
-                )
-            )
-        return pd.Series(out, dtype="object")
-
-    return _pcm_udf(F.col(bytes_col), F.col(sr_col), F.col(dur_col), F.col(codec_col))
-
-
 PCM_ERR_COL = "__pcm_err"
 
 
@@ -411,8 +326,7 @@ def with_pcm_check(
     boundary ONCE as raw Arrow buffers (no per-value JVM ArrowWriter
     copies, no pandas Series of bytes), is decoded with numpy in the
     worker, and is dropped from the output batch — downstream plans never
-    carry the heavy column again. Measured ~10x faster than the scalar
-    pandas-UDF form at local[32] on 120k clips.
+    carry the heavy column again.
     """
     import pyarrow as pa
 

@@ -1118,8 +1118,8 @@ class Schema:
         extra_checks: typing.Sequence[tuple] = (),
     ) -> ValidationResult:
         """``extra_checks``: [(label, message_column[, error_type])] —
-        content checks that need several columns at once (e.g. the Arrow
-        PCM validator, audio.pcm_check_column). The message column is a
+        content checks that need several columns at once (e.g. the JVM
+        PCM validator, audio.pcm_check_expr). The message column is a
         string Column, NULL = valid; failures become violations at path
         [label] (default error_type 'ValueInvalid', the reference's
         catch-all for callable validators, schema_builder.py:803-805).

@@ -39,7 +39,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from .audio import PCM_ERR_COL, with_pcm_check
 from .checks import (
     column_stats,
     ks_statistic,
@@ -125,22 +124,17 @@ def run_suite(
     with_pcm: bool = True,
     drift_reference: DataFrame | None = None,
     persist: bool = True,
-    broadcast_transcripts: bool = False,
-    content_mode: str = "jvm",
     transcript_rate: tuple[float, float] | None = None,
     transcript_pii: bool | list = False,
 ) -> SuiteResult:
     """Run the full constraint suite with a single scan of the source.
 
-    ``content_mode``:
-    - ``"jvm"`` (default): the PCM check runs as a pure Column expression
-      (audio.pcm_check_expr) inside the same whole-stage-codegen select as
-      the row schema — the audio payload never crosses the JVM->Python
-      boundary. Differentially verified against the Arrow dual-decoder on
-      every fixture corruption class (tests/test_audio.py).
-    - ``"arrow"``: the mapInArrow dual-decoder path (audio.with_pcm_check)
-      — required for non-canonical RIFF layouts or real compressed
-      codecs, and the oracle the JVM expression is tested against.
+    ``with_pcm``: the PCM check runs as a pure Column expression
+    (audio.pcm_check_expr) inside the same whole-stage-codegen select as
+    the row schema — the audio payload never crosses the JVM->Python
+    boundary. It is differentially verified against the Arrow
+    dual-decoder (audio.with_pcm_check) on every fixture corruption class
+    (tests/test_audio.py).
     """
     extra = []
     if transcript_rate is not None:
@@ -165,22 +159,17 @@ def run_suite(
         extra.append(
             ("transcript", pii_check_expr("transcript", kinds), "PiiInvalid")
         )
-    if with_pcm and content_mode == "jvm":
+    if with_pcm:
         from .audio import pcm_check_expr
 
         extra.append(("bytes", pcm_check_expr()))
-    elif with_pcm:
-        # Arrow-batch PCM pass: decodes audio once, drops the bytes column
-        # inside the Python worker, emits __pcm_err
-        clips = with_pcm_check(clips)
-        extra.append(("bytes", F.col(PCM_ERR_COL)))
 
     row_res = CLIPS_SCHEMA.validate(
         clips, id_cols=["clip_id"], extra_checks=extra
     )
 
     # skinny annotated table: everything downstream, audio dropped
-    ann = row_res.annotated.drop("bytes", PCM_ERR_COL)
+    ann = row_res.annotated.drop("bytes")
     if persist:
         # deserialized level: PySpark's MEMORY_AND_DISK is the serialized
         # variant, whose columnar re-encode measured 4-7x slower to build
@@ -217,8 +206,6 @@ def run_suite(
             F.col("transcript").alias("__expected"),
             F.lit(1).alias("__t"),
         )
-        if broadcast_transcripts:
-            t = F.broadcast(t)
         joined = ann.select(
             "clip_id", "transcript", F.lit(1).alias("__c")
         ).join(t, "clip_id", "full_outer")

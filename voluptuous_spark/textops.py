@@ -23,8 +23,8 @@ Hash basis (MinHash/SimHash): production default is ``basis='hashed'`` —
 xxhash64 on the shingle/token, no dictionary, zero extra shuffles. The
 ``basis='ranked'`` mode maps shingles/tokens to dense ranks via a
 sorted-distinct dictionary first, so any ANSI-SQL engine (DuckDB oracle)
-reproduces the signatures bit-for-bit; it costs a distinct +
-range-partitioned rank + join over all shingles and exists ONLY for
+reproduces the signatures bit-for-bit; it costs a distinct + one
+single-task sort + join over all shingles and exists ONLY for
 correctness checking — never run it on a production corpus.
 """
 
@@ -180,41 +180,21 @@ def ngram_jaccard_pairs(
     )
 
 
-def _dense_ranks(values: DataFrame, col: str, buckets: int = 64) -> DataFrame:
-    """(col, rank): dense 1-based ranks by ascending ``col`` — numerically
-    identical to ``row_number() over (order by col)`` but WITHOUT the
-    single-partition global window (WindowExec with no partition key moves
-    the whole dictionary to one task — a non-starter for a 10^12-row
-    corpus's shingle dictionary). Plan: bucket the distinct values by
-    DETERMINISTIC literal range bounds (``partitioning`` — a hash-ordered
-    sample collected once to the driver), rank locally per bucket, add
-    per-bucket offsets (a tiny driver-side cumulative sum over
-    ``buckets`` counts). Because the bucket id is a pure literal
-    expression, the offsets job and the consuming job agree by
-    construction — no cache needed (the old repartitionByRange form
-    cached the dictionary for bound consistency and never released it)."""
-    from .partitioning import range_pid_expr, sample_range_bounds
+def _dense_ranks(values: DataFrame, col: str) -> DataFrame:
+    """(col, rank): dense 1-based ranks by ascending ``col``, as
+    ``dense_rank() over (order by col)`` gives them. One lazy plan, no
+    Spark job at build time: the distinct values are sorted by one global
+    ``array_sort(collect_list(col))`` and ``posexplode``-d, rank = pos + 1.
 
-    d = values.select(col).distinct()
-    bounds = sample_range_bounds(d, col, buckets)
-    d = d.withColumn("__pid", range_pid_expr(F.col(col), bounds))
-    counts = {
-        r["__pid"]: r["cnt"]
-        for r in d.groupBy("__pid").agg(
-            F.count(F.lit(1)).alias("cnt")
-        ).collect()
-    }
-    offsets, acc = {}, 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    off = F.create_map(
-        *[F.lit(v) for kv in sorted(offsets.items()) for v in kv]
-    ) if offsets else F.create_map()
-    w = Window.partitionBy("__pid").orderBy(col)
-    return d.select(
-        col,
-        (F.row_number().over(w) + off[F.col("__pid")]).alias("rank"),
+    Bounds: one task holds the sorted distinct dictionary, which is fine
+    for the oracle mode this serves (``basis='hashed'`` is the scale
+    path). ``collect_list`` drops NULLs, so a NULL value gets no rank;
+    both callers filter to non-empty strings before ranking."""
+    return (
+        values.select(col).distinct()
+        .agg(F.array_sort(F.collect_list(col)).alias("__vs"))
+        .select(F.posexplode("__vs").alias("__pos", col))
+        .select(col, (F.col("__pos") + 1).cast("long").alias("rank"))
     )
 
 
@@ -229,8 +209,8 @@ def shingle_ranks(df: DataFrame, text_col: str = "text",
 
     ``basis='ranked'`` (oracle mode): dense ranks from the sorted
     distinct-shingle dictionary, reproducible in any ANSI-SQL engine (for
-    DuckDB parity checks). Costs a distinct + range-partitioned rank +
-    join over ALL shingles — roughly double the shuffle volume, so never
+    DuckDB parity checks). Costs a distinct + one single-task sort + join
+    over ALL shingles — roughly double the shuffle volume, so never
     use it on a production run (round-1 verdict called this out).
     """
     if basis == "hashed":
