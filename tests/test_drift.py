@@ -1,14 +1,21 @@
 """Exact two-sample KS (``checks.drift.ks_statistic``): equality with a
 pure-Python KS, and the build-time job budget of the KS and of
-``suite.run_suite`` (no Spark job until an output is forced)."""
+``suite.run_suite`` (no Spark job until an output is forced). PSI
+(``psi_report``) against a pure-Python PSI, and the category totals
+computed without an unpartitioned window."""
 
+import math
 import random
 import zlib
 from bisect import bisect_right
+from collections import Counter
 
 import pytest
 
-from voluptuous_spark.checks.drift import ks_statistic
+from voluptuous_spark.checks.drift import (
+    EPS, category_histogram, ks_statistic, psi_report,
+)
+from voluptuous_spark.sampling import split_report
 from voluptuous_spark.datasynth import clips_df, transcripts_df
 from voluptuous_spark.suite import run_suite
 
@@ -69,3 +76,61 @@ def test_run_suite_builds_no_job(spark, jobs_of):
         assert res.counts()["dur_ks"] == _py_ks(side[0], side[1])
     finally:
         res.unpersist()
+
+
+def _py_psi(a, b):
+    """PSI over the full outer join of the two histograms on value, in
+    which a NULL category never joins: (psi, n_categories)."""
+    def ratios(xs):
+        return {k: n / len(xs) for k, n in Counter(xs).items()}
+
+    ra, rb = ratios(a), ratios(b)
+    rows = [(ra.get(k), rb.get(k)) for k in (set(ra) | set(rb)) - {None}]
+    rows += [(ra[None], None)] if None in ra else []
+    rows += [(None, rb[None])] if None in rb else []
+    if not rows:
+        return None, 0
+
+    def p(r):
+        return max(r or 0.0, EPS)
+
+    return (sum((p(x) - p(y)) * math.log(p(x) / p(y)) for x, y in rows),
+            len(rows))
+
+
+PSI_CASES = [
+    ("skewed", ["wav"] * 85 + ["flac"] * 10 + ["mp3"] * 5,
+     ["wav"] * 70 + ["flac"] * 20 + ["opus"] * 10),
+    ("nulls_both_sides", ["a", None, "b", None], [None, "a", "a", "c"]),
+    ("disjoint", ["a", "b"], ["c"]),
+    ("empty_side", ["a", "b", "b"], []),
+    ("both_empty", [], []),
+    ("identical", ["x", "y", "y"], ["y", "x", "y"]),
+]
+
+
+@pytest.mark.parametrize("name,a,b", PSI_CASES, ids=[c[0] for c in PSI_CASES])
+def test_psi_equals_python_psi(spark, jobs_of, name, a, b):
+    da = spark.createDataFrame([(x,) for x in a], "c string")
+    db = spark.createDataFrame([(x,) for x in b], "c string")
+    out, jobs = jobs_of(lambda: psi_report(da, db, "c"))
+    assert jobs == 0, (name, jobs)
+    [row] = out.collect()
+    psi, n_cat = _py_psi(a, b)
+    assert row["n_categories"] == n_cat, name
+    if psi is None:
+        assert row["psi"] is None, name
+    else:
+        assert row["psi"] == pytest.approx(psi, rel=1e-12, abs=1e-12), name
+
+
+def test_category_totals_use_no_window(spark):
+    df = spark.createDataFrame(
+        [(s,) for s in ["train"] * 8 + ["val", "test", None]], "split string")
+    hist = category_histogram(df, "split")
+    for out in (hist, split_report(df), psi_report(df, df, "split")):
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "Window" not in plan
+    got = {r["value"]: (r["count"], r["ratio"]) for r in hist.collect()}
+    assert got == {"train": (8, 8 / 11), "val": (1, 1 / 11),
+                   "test": (1, 1 / 11), None: (1, 1 / 11)}

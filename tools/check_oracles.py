@@ -11,6 +11,10 @@ mode-invariance pass that must agree with the default run:
   --conf spark.sql.codegen.factoryMode=NO_CODEGEN
   --conf spark.sql.adaptive.enabled=false
 
+The last line gives how many generated classes the pass compiled, so a
+change in plan shape, or a codegen cache
+(``spark.sql.codegen.cache.maxEntries``) that evicts, shows in its output.
+
 --strict additionally requires IDENTICAL pandas dtypes and exact values
 (no float rounding) after column-name sort — this replicates the driver's
 value-hash sensitivity (e.g. DuckDB HUGEINT -> float64 drift fails
@@ -100,6 +104,10 @@ def main():
     spark = get_spark(extra_conf=conf)
     for key in conf:
         print(f"conf {key}={spark.conf.get(key)}")
+    # one count per generated class Janino compiles, JVM-wide
+    compiles = (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+                .METRIC_COMPILATION_TIME())
+    compiled_before = compiles.getCount()
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
@@ -153,6 +161,7 @@ def main():
             print("  oracle:", o[bad].head(3).to_dict("records"))
 
     print(f"\n{len(qs) - len(failures)}/{len(qs)} matched")
+    print(f"generated classes compiled: {compiles.getCount() - compiled_before}")
     sys.exit(1 if failures else 0)
 
 

@@ -29,9 +29,11 @@ import struct
 import wave
 
 import numpy as np
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
+
+from .session import session_memo
 
 SNR_FLOOR_DB = 30.0
 
@@ -254,7 +256,21 @@ def pcm_check_expr(
     DRAM passes per payload on a shared memory bus) is what preserves
     N->4N throughput scaling when all executors of a node contend on one
     socket.
+
+    Built once per active session and argument tuple, and the same
+    Column is returned after that. Its binary literals print as a new
+    ``[B@...`` on every build, so a fresh tree would miss the
+    ``Schema.validate`` memo, whose key holds ``repr`` of each extra
+    check.
     """
+    return session_memo(
+        SparkSession.active(),
+        ("pcm_check_expr", bytes_col, sr_col, dur_col, codec_col),
+        lambda: _pcm_check_expr(bytes_col, sr_col, dur_col, codec_col),
+    )
+
+
+def _pcm_check_expr(bytes_col, sr_col, dur_col, codec_col) -> Column:
     b = F.col(bytes_col)
     sr_c, dur_c, codec_c = F.col(sr_col), F.col(dur_col), F.col(codec_col)
     blen = F.length(b)

@@ -16,39 +16,72 @@ Scale strategy:
   the sorted (|distinct values|-row) table in a single task, so its
   memory is bounded by value cardinality, not by row count.
 - Everything here is LAZY — no driver-side .count()/.collect(), no Spark
-  job while the plan is built. Ratios and totals come from windows or
-  aggregates over the already-aggregated (tiny) tables, so each check
+  job while the plan is built. Ratios and totals come from one global
+  aggregate over the already-aggregated (tiny) tables, so each check
   runs when an action finally forces it, and several checks can be
-  submitted concurrently from threads.
+  submitted concurrently from threads. No unpartitioned window: Spark
+  warns on each, and a collect_list into one row carries the same
+  single-task total.
+- PSI and KS build their Column trees once per session and column
+  (``session.session_memo``); each call then only applies them.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import session_memo
 
 EPS = 1e-6
 
-def _ALL():
-    """Unpartitioned window, used ONLY over post-aggregation tables whose
-    row count is bounded by category/value cardinality (n_categories or
-    |distinct values| rows — kilobytes). Spark logs ``WindowExec: No
-    Partition Defined ... can cause serious performance degradation`` for
-    every use; over these tiny aggregated tables the warning is benign by
-    construction. If this ever appears over a NON-aggregated input, that
-    is a real regression — every caller below feeds it a groupBy output.
-    Needs an active session, so built lazily."""
-    return Window.partitionBy()
-
 
 def category_histogram(df: DataFrame, col: str) -> DataFrame:
-    """(value, count, ratio) — one hash agg; ratio via a window over the
-    aggregated (n_categories-row) table, no separate count job."""
+    """(value, count, ratio) — one hash agg, then one single-row
+    aggregate over the (n_categories-row) result for the total; no
+    separate count job."""
     return (
         df.groupBy(F.col(col).alias("value"))
         .agg(F.count(F.lit(1)).alias("count"))
-        .withColumn("ratio", F.col("count") / F.sum("count").over(_ALL()))
+        .agg(F.collect_list(F.struct("value", "count")).alias("xs"),
+             F.sum("count").alias("n"))
+        .select(F.inline("xs"), "n")
+        .select("value", "count", (F.col("count") / F.col("n")).alias("ratio"))
     )
+
+
+def _psi_columns(col: str):
+    """Column lists of ``psi_report``: each side's tagged select, the
+    per-category sums and the single-row fold."""
+    def side(tag, ca, cb):
+        v = F.col(col)
+        # a NULL category stays one row per side, as it was when the two
+        # histograms were joined on value (NULL never joins)
+        return [v.alias("value"),
+                F.when(v.isNull(), F.lit(tag)).alias("null_side"),
+                F.lit(ca).alias("ca"), F.lit(cb).alias("cb")]
+
+    per_value = [F.sum("ca").alias("ca"), F.sum("cb").alias("cb")]
+    fold = [F.collect_list(F.struct("ca", "cb")).alias("xs"),
+            F.sum("ca").alias("na"), F.sum("cb").alias("nb")]
+    na, nb = F.col("na"), F.col("nb")
+
+    def share(c, n):
+        # ratio floored at EPS; an empty side has share 0 everywhere
+        return F.greatest(
+            F.coalesce(F.when(n > 0, c / n), F.lit(0.0)), F.lit(EPS))
+
+    def step(acc, x):
+        pa, pb = share(x["ca"], na), share(x["cb"], nb)
+        return acc + (pa - pb) * F.log(pa / pb)
+
+    xs = F.col("xs")
+    out = [
+        F.when(F.size(xs) > 0, F.aggregate(xs, F.lit(0.0), step))
+        .alias("psi"),
+        F.size(xs).cast("long").alias("n_categories"),
+    ]
+    return side("a", 1, 0), side("b", 0, 1), per_value, fold, out
 
 
 def psi_report(df_a: DataFrame, df_b: DataFrame, col: str) -> DataFrame:
@@ -56,24 +89,19 @@ def psi_report(df_a: DataFrame, df_b: DataFrame, col: str) -> DataFrame:
 
     PSI = sum over categories of (pa - pb) * ln(pa / pb), with ratios
     floored at EPS for categories absent on one side. Single row:
-    (psi, n_categories).
+    (psi, n_categories); psi is NULL when both sides are empty.
+
+    One lazy plan, as ``ks_statistic``: the sides are tagged and unioned,
+    one ``groupBy`` gives per-category counts of both (one hash-agg
+    shuffle), and one global aggregate folds them with the side totals.
     """
-    ha = category_histogram(df_a, col).select(
-        "value", F.col("ratio").alias("ratio_a")
-    )
-    hb = category_histogram(df_b, col).select(
-        "value", F.col("ratio").alias("ratio_b")
-    )
-    joined = ha.join(hb, on="value", how="full_outer").select(
-        "value",
-        F.greatest(F.coalesce("ratio_a", F.lit(0.0)), F.lit(EPS)).alias("pa"),
-        F.greatest(F.coalesce("ratio_b", F.lit(0.0)), F.lit(EPS)).alias("pb"),
-    )
-    return joined.agg(
-        F.sum((F.col("pa") - F.col("pb")) * F.log(F.col("pa") / F.col("pb"))).alias(
-            "psi"
-        ),
-        F.count(F.lit(1)).alias("n_categories"),
+    side_a, side_b, per_value, fold, out = session_memo(
+        df_a.sparkSession, ("psi_report", col), lambda: _psi_columns(col))
+    return (
+        df_a.select(*side_a).unionAll(df_b.select(*side_b))
+        .groupBy("value", "null_side").agg(*per_value)
+        .agg(*fold)
+        .select(*out)
     )
 
 
@@ -94,6 +122,37 @@ def numeric_psi(
     return psi_report(bucketed(df_a), bucketed(df_b), "value")
 
 
+def _ks_columns(col: str):
+    """Column lists of ``ks_statistic``: each side's tagged select, the
+    per-value sums, the sorting aggregate and the fold."""
+    def side(ca, cb):
+        return [F.col(col).cast("double").alias("v"),
+                F.lit(ca).alias("ca"), F.lit(cb).alias("cb")]
+
+    per_value = [F.sum("ca").alias("ca"), F.sum("cb").alias("cb")]
+    fold = [
+        F.array_sort(F.collect_list(F.struct("v", "ca", "cb"))).alias("xs"),
+        F.sum("ca").alias("na"),
+        F.sum("cb").alias("nb"),
+    ]
+    na, nb = F.col("na"), F.col("nb")
+
+    def step(acc, x):
+        a, b = acc["a"] + x["ca"], acc["b"] + x["cb"]
+        return F.struct(
+            a.alias("a"), b.alias("b"),
+            F.greatest(acc["d"], F.abs(a / na - b / nb)).alias("d"),
+        )
+
+    start = F.struct(
+        F.lit(0).cast("long").alias("a"), F.lit(0).cast("long").alias("b"),
+        F.lit(0.0).alias("d"),
+    )
+    out = (F.when((na > 0) & (nb > 0), F.aggregate("xs", start, step)["d"])
+           .alias("ks_stat"))
+    return side(1, 0), side(0, 1), F.col("v").isNotNull(), per_value, fold, out
+
+
 def ks_statistic(df_a: DataFrame, df_b: DataFrame, col: str) -> DataFrame:
     """Exact two-sample Kolmogorov–Smirnov statistic, single row
     (ks_stat); NULL when either side has no non-NULL value.
@@ -109,33 +168,12 @@ def ks_statistic(df_a: DataFrame, df_b: DataFrame, col: str) -> DataFrame:
     ``col`` (a few hundred for ``dur_ms``; 583k for sf0.1
     ``l_extendedprice`` still folds in seconds), not with the row count.
     """
-    def side(df, ca, cb):
-        return df.select(
-            F.col(col).cast("double").alias("v"),
-            F.lit(ca).alias("ca"), F.lit(cb).alias("cb"),
-        ).filter(F.col("v").isNotNull())
-
-    tbl = side(df_a, 1, 0).unionAll(side(df_b, 0, 1)).groupBy("v").agg(
-        F.sum("ca").alias("ca"), F.sum("cb").alias("cb")
-    ).agg(
-        F.array_sort(F.collect_list(F.struct("v", "ca", "cb"))).alias("xs"),
-        F.sum("ca").alias("na"),
-        F.sum("cb").alias("nb"),
-    )
-    na, nb = F.col("na"), F.col("nb")
-
-    def step(acc, x):
-        a, b = acc["a"] + x["ca"], acc["b"] + x["cb"]
-        return F.struct(
-            a.alias("a"), b.alias("b"),
-            F.greatest(acc["d"], F.abs(a / na - b / nb)).alias("d"),
-        )
-
-    start = F.struct(
-        F.lit(0).cast("long").alias("a"), F.lit(0).cast("long").alias("b"),
-        F.lit(0.0).alias("d"),
-    )
-    return tbl.select(
-        F.when((na > 0) & (nb > 0), F.aggregate("xs", start, step)["d"])
-        .alias("ks_stat")
+    side_a, side_b, non_null, per_value, fold, out = session_memo(
+        df_a.sparkSession, ("ks_statistic", col), lambda: _ks_columns(col))
+    return (
+        df_a.select(*side_a).filter(non_null)
+        .unionAll(df_b.select(*side_b).filter(non_null))
+        .groupBy("v").agg(*per_value)
+        .agg(*fold)
+        .select(out)
     )

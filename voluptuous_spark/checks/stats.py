@@ -15,6 +15,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import session_memo
+
 
 def column_stats(
     df: DataFrame,
@@ -29,12 +31,37 @@ def column_stats(
     constant memory — the only sane choice at 10^12 rows);
     ``exact_distinct=True`` is for oracle comparison at test scale.
     min/max are cast to string so heterogeneous columns stack into one
-    result table.
+    result table. The Column lists are built once per session and
+    arguments (``session.session_memo``).
     """
-    cols = list(cols or df.columns)
+    cols = tuple(cols or df.columns)
+    quantiles = tuple(quantiles)
     by_name = {f.name: f.dataType for f in df.schema.fields}
+    numeric = tuple(
+        bool(quantiles) and isinstance(by_name[c], T.NumericType)
+        for c in cols
+    )
+    aggs, dist, out = session_memo(
+        df.sparkSession,
+        ("column_stats", cols, exact_distinct, quantiles, numeric),
+        lambda: _stats_columns(cols, exact_distinct, quantiles, numeric),
+    )
+    wide = df.agg(*aggs)
+    if exact_distinct:
+        # exact multi-column COUNT(DISTINCT) mixed into the same agg forces
+        # an Expand plan that multiplies every row by (n_cols + 1) through
+        # the partial aggregate (measured 4-8x slower than two passes).
+        # Separate single-row aggs + crossJoin keep both passes narrow.
+        wide = wide.crossJoin(df.agg(*dist))
+    return wide.select(out).select("s.*")
+
+
+def _stats_columns(cols, exact_distinct, quantiles, numeric):
+    """(aggregates, exact-distinct aggregates, exploded row Column) of
+    ``column_stats``; ``numeric[i]`` says whether ``cols[i]`` gets
+    quantiles."""
     aggs = [F.count(F.lit(1)).alias("__n")]
-    for c in cols:
+    for c, num in zip(cols, numeric):
         aggs.append(F.sum(F.col(c).isNull().cast("long")).alias(f"__nc_{c}"))
         if not exact_distinct:
             # HLL is an ordinary partial aggregate: mixes freely with the
@@ -42,25 +69,17 @@ def column_stats(
             aggs.append(F.approx_count_distinct(F.col(c)).alias(f"__d_{c}"))
         aggs.append(F.min(F.col(c)).cast("string").alias(f"__min_{c}"))
         aggs.append(F.max(F.col(c)).cast("string").alias(f"__max_{c}"))
-        if quantiles and isinstance(by_name[c], T.NumericType):
+        if num:
             aggs.append(
                 F.percentile_approx(
                     F.col(c).cast("double"), list(quantiles), 10000
                 ).alias(f"__q_{c}")
             )
-    wide = df.agg(*aggs)
-    if exact_distinct:
-        # exact multi-column COUNT(DISTINCT) mixed into the same agg forces
-        # an Expand plan that multiplies every row by (n_cols + 1) through
-        # the partial aggregate (measured 4-8x slower than two passes).
-        # Separate single-row aggs + crossJoin keep both passes narrow.
-        dist = df.agg(
-            *[F.count_distinct(F.col(c)).alias(f"__d_{c}") for c in cols]
-        )
-        wide = wide.crossJoin(dist)
+    dist = [F.count_distinct(F.col(c)).alias(f"__d_{c}")
+            for c in cols] if exact_distinct else []
 
     rows = []
-    for c in cols:
+    for c, num in zip(cols, numeric):
         fields = [
             F.lit(c).alias("column"),
             F.col("__n").alias("n_rows"),
@@ -71,14 +90,11 @@ def column_stats(
             F.col(f"__max_{c}").alias("max_value"),
         ]
         if quantiles:
-            if isinstance(by_name[c], T.NumericType):
+            if num:
                 fields.append(F.col(f"__q_{c}").alias("quantiles"))
             else:
                 fields.append(
                     F.lit(None).cast("array<double>").alias("quantiles")
                 )
         rows.append(F.struct(*fields))
-    return (
-        wide.select(F.explode(F.array(*rows)).alias("s"))
-        .select("s.*")
-    )
+    return aggs, dist, F.explode(F.array(*rows)).alias("s")

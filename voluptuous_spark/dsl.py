@@ -185,10 +185,6 @@ def _pytype_matches(pytype, dt) -> bool:
     return False
 
 
-def _lit_for(value):
-    return F.lit(value)
-
-
 def _py_str(col, dt):
     """Python ``str(v)`` rendering of a column value (used in message
     interpolation like Equal's 'value:{} != target:{}'): scalars render

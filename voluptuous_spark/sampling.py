@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .checks.drift import category_histogram
+
 _SIXTY_BITS = 1 << 60
 
 
@@ -177,10 +179,9 @@ def stratified_take(
 
 def split_report(df: DataFrame, split_col: str = "split") -> DataFrame:
     """(split, n, fraction) — one partial-aggregated pass."""
-    counts = df.groupBy(split_col).agg(F.count("*").alias("n"))
-    total = F.sum("n").over(Window.partitionBy())
-    return counts.select(
-        split_col, "n", (F.col("n") / total).alias("fraction")
+    return category_histogram(df, split_col).select(
+        F.col("value").alias(split_col), F.col("count").alias("n"),
+        F.col("ratio").alias("fraction"),
     )
 
 

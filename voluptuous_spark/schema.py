@@ -1130,8 +1130,12 @@ class Schema:
         array from those. This keeps every err expression single-use (no
         3x duplicate evaluation for cond/message/error_type) and keeps the
         py4j expression-building cost linear. Compiled selections are
-        memoized per input schema — the reference compiles once per Schema
-        too (schema_builder.py:138)."""
+        memoized per session, input schema, id columns and extra checks —
+        the reference compiles once per Schema too
+        (schema_builder.py:138) — so the Columns are built once per
+        session. An extra check is keyed by its ``repr``: pass the same
+        Column on every call (``pcm_check_expr`` returns one per session),
+        or one that prints the same, for the call to hit the memo."""
         if self._value_only:
             raise UnsupportedSchema(
                 "table Schema must be a dict of column -> validator (or "

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import SparkSession
 
@@ -73,7 +74,12 @@ def get_spark(
     - Arrow enabled for the pandas-UDF PCM validators, with a bounded batch
       size so binary audio payloads don't blow executor memory;
     - shuffle partitions sized to cores locally (cluster deployments
-      override via spark.sql.shuffle.partitions / AQE coalescing).
+      override via spark.sql.shuffle.partitions / AQE coalescing);
+    - a generated-code cache of 1000 classes
+      (``spark.sql.codegen.cache.maxEntries``). It is a static conf: a
+      session built elsewhere must set it before its SparkContext starts.
+      With Spark's default of 100, each warm ``run_suite`` op recompiles
+      about 30 classes.
     """
     master = master or os.environ.get("SPARK_MASTER", None)
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
@@ -126,6 +132,15 @@ def get_spark(
         "spark.sql.optimizer.excludedRules":
             "org.apache.spark.sql.catalyst.optimizer."
             "InferFiltersFromGenerate",
+        # Compiled whole-stage and projection classes are cached per JVM,
+        # keyed by their generated source, in a cache of 100 entries by
+        # default. A cold clips run_suite op compiles 98 classes and the
+        # session's setup 4 more, so the default evicted part of that
+        # working set and every warm op recompiled 24-41 classes. 1000
+        # holds it with room for the 54 oracle queries (a strict pass
+        # compiles about 560). Static conf: it only counts when this
+        # builder starts the SparkContext.
+        "spark.sql.codegen.cache.maxEntries": "1000",
         # local mode: the driver heap IS the executor heap; 32 concurrent
         # tasks each buffering multi-MB audio batches need real headroom
         # (8g produced GCLocker allocation stalls at local[32])
@@ -160,3 +175,19 @@ def get_spark(
     for k, v in conf.items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+_SESSION_MEMO: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def session_memo(spark: SparkSession, key, build):
+    """``build()``, computed once per session and ``key``.
+
+    For Column trees that a check applies on every call: building one
+    costs a py4j round trip per node, while an unresolved Column holds no
+    data and serves every DataFrame of the session. Entries go when the
+    session object does."""
+    memo = _SESSION_MEMO.setdefault(spark, {})
+    if key not in memo:
+        memo[key] = build()
+    return memo[key]

@@ -29,6 +29,11 @@ plus one single-task fold over the distinct values.
 Job budget: ``run_suite`` itself launches NO Spark job — every output,
 the exact KS included, is a lazy plan forced by ``violations.count()`` /
 ``SuiteResult.counts()`` (tests/test_drift.py pins the 0).
+
+Build budget: every Column tree the suite applies is built once per
+session (``_SuitePlan``, the checks' own memos and the compiled schema),
+so a warm ``run_suite`` makes only ``select`` / ``groupBy`` / ``join``
+calls over its input, and its schema compile is a memo hit.
 """
 
 from __future__ import annotations
@@ -47,6 +52,7 @@ from .checks import (
 )
 from .dsl import ALLOW_EXTRA, All, Coerce, In, Length, Match, Range, Required
 from .schema import Schema
+from .session import session_memo
 
 VALID_SRS = [8000, 16000, 22050, 44100, 48000]
 VALID_CODECS = ["wav", "flac", "opus", "mp3"]
@@ -82,24 +88,28 @@ class SuiteResult:
         latency each, which at small scale dominates wall time. With AQE
         each shuffle stage is its own job: on 4k clips with transcripts
         the six actions run 20 Spark jobs (the KS is one action: one
-        hash-agg shuffle, then a single-task fold)."""
+        hash-agg shuffle, then a single-task fold). Each action's jobs
+        carry the description ``run_suite:counts:<check>``."""
         from concurrent.futures import ThreadPoolExecutor
 
+        spark = self.annotated.sparkSession
+        plan = session_memo(spark, "run_suite", _SuitePlan)
         jobs = {
-            "report": lambda: self.report.agg(
-                F.sum("rows").alias("rows"),
-                F.sum("passed").alias("passed"),
-                F.sum("failed").alias("failed"),
-                F.sum("violation_count").alias("violations"),
-            ).collect()[0],
+            "report": lambda: self.report.agg(*plan.report_totals).collect()[0],
             "uniqueness": lambda: self.uniqueness.collect()[0],
             "referential": lambda: self.referential.collect()[0],
             "stats_rows": lambda: self.stats.count(),
             "codec_psi": lambda: self.codec_psi.collect()[0]["psi"],
             "dur_ks": lambda: self.dur_ks.collect()[0]["ks_stat"],
         }
+
+        def labelled(name, action):
+            # a job description is a property of the submitting thread
+            spark.sparkContext.setJobDescription(f"run_suite:counts:{name}")
+            return action()
+
         with ThreadPoolExecutor(max_workers=len(jobs)) as ex:
-            res = {k: ex.submit(v) for k, v in jobs.items()}
+            res = {k: ex.submit(labelled, k, v) for k, v in jobs.items()}
             res = {k: f.result() for k, f in res.items()}
         rep = res["report"]
         return {
@@ -135,7 +145,75 @@ def run_suite(
     boundary. It is differentially verified against the Arrow
     dual-decoder (audio.with_pcm_check) on every fixture corruption class
     (tests/test_audio.py).
+
+    Every Column the suite applies, the extra checks and the compiled
+    schema included, is built on the session's first call and reused
+    after that, so a warm call costs a few dozen py4j calls to apply
+    them to the new input and no Column build.
     """
+    spark = clips.sparkSession
+    rate_key = None if transcript_rate is None else tuple(transcript_rate)
+    pii_key = (transcript_pii if isinstance(transcript_pii, bool)
+               else tuple(transcript_pii))
+    extra = session_memo(
+        spark, ("run_suite.extra", with_pcm, rate_key, pii_key),
+        lambda: _extra_checks(with_pcm, transcript_rate, transcript_pii))
+    plan = session_memo(spark, "run_suite", _SuitePlan)
+    row_res = CLIPS_SCHEMA.validate(
+        clips, id_cols=["clip_id"], extra_checks=extra
+    )
+
+    # skinny annotated table: everything downstream, audio dropped
+    ann = row_res.annotated.drop("bytes")
+    if persist:
+        # deserialized level: PySpark's MEMORY_AND_DISK is the serialized
+        # variant, whose columnar re-encode measured 4-7x slower to build
+        ann = ann.persist(StorageLevel.MEMORY_AND_DISK_DESER)
+
+    violations = (
+        ann.filter(plan.failed).select(*plan.exploded).select(*plan.violation)
+    )
+    report = ann.groupBy(plan.partition_id).agg(*plan.report)
+    uniq = uniqueness_report(ann, ["clip_id"])
+
+    if transcripts is not None:
+        joined = ann.select(*plan.clip_side).join(
+            transcripts.select(*plan.transcript_side), "clip_id", "full_outer")
+        ref = joined.agg(*plan.referential).select(*plan.referential_out)
+        tr_viol = joined.filter(plan.mismatch).select(*plan.mismatch_out)
+        violations = violations.unionByName(tr_viol)
+    else:
+        ref = spark.createDataFrame(
+            [(0, 0, 0.0, 0)],
+            "n_child long, n_orphans long, orphan_rate double, n_mismatches long",
+        )
+
+    stats = column_stats(
+        ann, ["clip_id", "sr_hz", "dur_ms", "codec", "transcript"]
+    )
+
+    if drift_reference is None:
+        a, b = ann.filter(plan.half_a), ann.filter(plan.half_b)
+    else:
+        a, b = ann, drift_reference
+    codec_psi = psi_report(a, b, "codec")
+    dur_ks = ks_statistic(a, b, "dur_ms")
+
+    return SuiteResult(
+        row_result=row_res,
+        annotated=ann,
+        violations=violations,
+        report=report,
+        uniqueness=uniq,
+        referential=ref,
+        stats=stats,
+        codec_psi=codec_psi,
+        dur_ks=dur_ks,
+    )
+
+
+def _extra_checks(with_pcm, transcript_rate, transcript_pii) -> list:
+    """``Schema.validate`` extra checks for ``run_suite``'s options."""
     extra = []
     if transcript_rate is not None:
         # joint audio<->text speaking-rate gate: pure Column over metadata
@@ -163,112 +241,76 @@ def run_suite(
         from .audio import pcm_check_expr
 
         extra.append(("bytes", pcm_check_expr()))
+    return extra
 
-    row_res = CLIPS_SCHEMA.validate(
-        clips, id_cols=["clip_id"], extra_checks=extra
-    )
 
-    # skinny annotated table: everything downstream, audio dropped
-    ann = row_res.annotated.drop("bytes")
-    if persist:
-        # deserialized level: PySpark's MEMORY_AND_DISK is the serialized
-        # variant, whose columnar re-encode measured 4-7x slower to build
-        ann = ann.persist(StorageLevel.MEMORY_AND_DISK_DESER)
+class _SuitePlan:
+    """The Column lists ``run_suite`` and ``SuiteResult.counts`` apply
+    over the annotated table, built once per session
+    (``session.session_memo``): each node of a Column tree costs a py4j
+    round trip to build."""
 
-    err = F.explode("__errors").alias("e")
-    violations = (
-        ann.filter(F.size("__errors") > 0)
-        .select("clip_id", err)
-        .select(
-            "clip_id",
+    def __init__(self):
+        errors = F.col("__errors")
+        clip_id = F.col("clip_id")
+        # violations: one row per __errors entry
+        self.failed = F.size(errors) > 0
+        self.exploded = [clip_id, F.explode(errors).alias("e")]
+        self.violation = [
+            clip_id,
             F.col("e.path").alias("path"),
             F.col("e.message").alias("message"),
             F.col("e.error_type").alias("error_type"),
             F.col("e.offending").alias("offending"),
-        )
-    )
-
-    ok = (F.size("__errors") == 0).cast("long")
-    report = ann.groupBy(
-        F.spark_partition_id().alias("partition_id")
-    ).agg(
-        F.count(F.lit(1)).alias("rows"),
-        F.sum(ok).alias("passed"),
-        F.sum(1 - ok).alias("failed"),
-        F.sum(F.size("__errors")).alias("violation_count"),
-    )
-
-    uniq = uniqueness_report(ann, ["clip_id"])
-
-    if transcripts is not None:
-        t = transcripts.select(
-            "clip_id",
-            F.col("transcript").alias("__expected"),
-            F.lit(1).alias("__t"),
-        )
-        joined = ann.select(
-            "clip_id", "transcript", F.lit(1).alias("__c")
-        ).join(t, "clip_id", "full_outer")
-        ref = joined.agg(
+        ]
+        # report: pass/fail per partition, and its totals in counts()
+        ok = (F.size(errors) == 0).cast("long")
+        self.partition_id = F.spark_partition_id().alias("partition_id")
+        self.report = [
+            F.count(F.lit(1)).alias("rows"),
+            F.sum(ok).alias("passed"),
+            F.sum(1 - ok).alias("failed"),
+            F.sum(F.size(errors)).alias("violation_count"),
+        ]
+        self.report_totals = [
+            F.sum("rows").alias("rows"),
+            F.sum("passed").alias("passed"),
+            F.sum("failed").alias("failed"),
+            F.sum("violation_count").alias("violations"),
+        ]
+        # referential: clips <-> transcripts in one full outer join
+        transcript, expected = F.col("transcript"), F.col("__expected")
+        c, t = F.col("__c"), F.col("__t")
+        self.clip_side = [clip_id, transcript, F.lit(1).alias("__c")]
+        self.transcript_side = [
+            clip_id, transcript.alias("__expected"), F.lit(1).alias("__t"),
+        ]
+        self.referential = [
             F.count(F.lit(1)).alias("n_child"),
             # side-table rows with no matching clip (and vice versa)
+            F.sum((c.isNull() | t.isNull()).cast("long")).alias("n_orphans"),
             F.sum(
-                (F.col("__c").isNull() | F.col("__t").isNull()).cast("long")
-            ).alias("n_orphans"),
-            F.sum(
-                (
-                    F.col("__c").isNotNull()
-                    & F.col("__t").isNotNull()
-                    & ~F.col("transcript").eqNullSafe(F.col("__expected"))
-                ).cast("long")
+                (c.isNotNull() & t.isNotNull()
+                 & ~transcript.eqNullSafe(expected)).cast("long")
             ).alias("n_mismatches"),
-        ).select(
-            "n_child",
-            "n_orphans",
+        ]
+        self.referential_out = [
+            F.col("n_child"),
+            F.col("n_orphans"),
             (F.col("n_orphans") / F.col("n_child")).alias("orphan_rate"),
-            "n_mismatches",
+            F.col("n_mismatches"),
+        ]
+        self.mismatch = (
+            transcript.isNotNull() & expected.isNotNull()
+            & (transcript != expected)
         )
-        tr_viol = (
-            joined.filter(
-                F.col("transcript").isNotNull()
-                & F.col("__expected").isNotNull()
-                & (F.col("transcript") != F.col("__expected"))
-            )
-            .select(
-                "clip_id",
-                F.array(F.lit("transcript")).alias("path"),
-                F.lit("transcript does not match reference").alias("message"),
-                F.lit("ValueInvalid").alias("error_type"),
-                F.lit(None).cast("string").alias("offending"),
-            )
-        )
-        violations = violations.unionByName(tr_viol)
-    else:
-        ref = clips.sparkSession.createDataFrame(
-            [(0, 0, 0.0, 0)],
-            "n_child long, n_orphans long, orphan_rate double, n_mismatches long",
-        )
-
-    stats = column_stats(
-        ann, ["clip_id", "sr_hz", "dur_ms", "codec", "transcript"]
-    )
-
-    if drift_reference is None:
-        a = ann.filter(F.crc32(F.col("clip_id")) % 2 == 0)
-        b = ann.filter(F.crc32(F.col("clip_id")) % 2 == 1)
-    else:
-        a, b = ann, drift_reference
-    codec_psi = psi_report(a, b, "codec")
-    dur_ks = ks_statistic(a, b, "dur_ms")
-
-    return SuiteResult(
-        row_result=row_res,
-        annotated=ann,
-        violations=violations,
-        report=report,
-        uniqueness=uniq,
-        referential=ref,
-        stats=stats,
-        codec_psi=codec_psi,
-        dur_ks=dur_ks,
-    )
+        self.mismatch_out = [
+            clip_id,
+            F.array(F.lit("transcript")).alias("path"),
+            F.lit("transcript does not match reference").alias("message"),
+            F.lit("ValueInvalid").alias("error_type"),
+            F.lit(None).cast("string").alias("offending"),
+        ]
+        # drift: the table split in two halves by a hash of the key
+        half = F.crc32(clip_id) % 2
+        self.half_a, self.half_b = half == 0, half == 1
