@@ -553,9 +553,9 @@ def _checkpoint_resume(spark, sf_dir):
 
 def _doc_profile(spark, sf_dir):
     """Fingerprint + token counts + EXACT-DEDUP group columns in ONE
-    scan of documents (exact dedup = hash-groupBy on the 32-byte md5
-    fingerprint, textops.exact_duplicates; expressed as a window over
-    the fingerprint so the per-doc profile and the dup-group stats share
+    scan of documents (exact dedup = grouping on the 32-byte md5 of
+    ``textops.normalize_text``, expressed as a window over the
+    fingerprint so the per-doc profile and the dup-group stats share
     the single shuffle)."""
     from pyspark.sql import Window
 

@@ -78,7 +78,7 @@ def _pcm_invariant(spark, sf_dir):
 def _audio_features_check(spark, sf_dir):
     """Features + quality-gate verdicts in ONE pass. ``gates`` is
     ``audio_gate_labels()`` — the sorted comma-joined failed gate names
-    (same threshold source as ``audio_quality_violations``) evaluated as
+    (thresholds from ``audio._gate_conditions``) evaluated as
     a Column expression in the same stage as the feature projection (no
     join, no second Arrow pass); 'pass' when clean, '-' when the payload
     was absent/undecodable/non-PCM. Gate NAMES only, so the oracle

@@ -4,13 +4,11 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from voluptuous_spark.packing import (
-    pack_assign,
-    pack_stats,
-    packing_efficiency,
-)
-from voluptuous_spark.sampling import rebalance_sources
-from voluptuous_spark.textops import line_doc_frequency, remove_boilerplate
+from pyspark.sql import Window
+
+from voluptuous_spark.packing import pack_assign
+from voluptuous_spark.sampling import rebalance_sources, stratified_take
+from voluptuous_spark.textops import _line_hash_frequency, remove_boilerplate
 
 BP = "COOKIE BANNER: accept all"
 NAV = "home | about | contact"
@@ -30,10 +28,18 @@ def pages(spark):
 
 
 def test_line_doc_frequency(pages):
-    dfreq = {
-        (r["source"], r["line"]): r["df_docs"]
-        for r in line_doc_frequency(pages).collect()
+    """Per-source document frequency of each line, keyed by the line
+    hash that ``remove_boilerplate`` joins on."""
+    spark = pages.sparkSession
+    lines = [BP, NAV, "unique zero"]
+    h = dict(zip(lines, spark.range(1).select(
+        *[F.xxhash64(F.lit(x)) for x in lines]).first()))
+    by_hash = {
+        (r["source"], r["__lh"]): r["df_docs"]
+        for r in _line_hash_frequency(pages, "text", "doc_id", "source")
+        .collect()
     }
+    dfreq = {(s, x): by_hash.get((s, h[x])) for s in "ab" for x in lines}
     assert dfreq[("a", BP)] == 4
     assert dfreq[("a", NAV)] == 3
     assert dfreq[("b", BP)] == 1
@@ -138,29 +144,21 @@ def test_pack_assign_invariants(spark):
     packed = pack_assign(df, budget=2048, n_buckets=8, salt="p")
     # every doc in exactly one pack
     assert packed.count() == 2_000
-    stats = pack_stats(packed, 2048).collect()
+    # per pack: token total and the tokens of its last document
+    w = Window.partitionBy("pack_bucket", "pack_id").orderBy(
+        F.desc("pack_pos"))
+    packs = packed.withColumn("__last", F.row_number().over(w)).groupBy(
+        "pack_bucket", "pack_id").agg(
+        F.sum("n_tokens").alias("tokens"),
+        F.max(F.when(F.col("__last") == 1, F.col("n_tokens")))
+        .alias("last_tokens"),
+    ).collect()
     # pre-overflow total < budget: total - last doc's tokens < budget
-    last = packed.withColumn(
-        "__last",
-        F.row_number().over(
-            __import__("pyspark.sql.window", fromlist=["Window"])
-            .Window.partitionBy("pack_bucket", "pack_id")
-            .orderBy(F.desc("pack_pos"))
-        ),
-    ).where(F.col("__last") == 1).select(
-        "pack_bucket", "pack_id", F.col("n_tokens").alias("last_tokens")
-    )
-    joined = {
-        (r["pack_bucket"], r["pack_id"]): (r["tokens"], r["last_tokens"])
-        for r in spark.createDataFrame(stats).join(
-            last, ["pack_bucket", "pack_id"]
-        ).collect()
-    }
-    for (b, p), (tot, lt) in joined.items():
-        assert tot - lt < 2048, (b, p)
-    eff = packing_efficiency(packed, 2048).collect()[0]
-    assert eff["n_docs"] == 2_000
-    assert eff["utilization"] > 0.85  # lanes fill well past the tails
+    for r in packs:
+        assert r["tokens"] - r["last_tokens"] < 2048, r
+    # lanes fill well past the tails: budget used, overflow clipped
+    used = sum(min(r["tokens"], 2048) for r in packs)
+    assert used / (len(packs) * 2048) > 0.85
 
 
 def test_pack_md5_matches_duckdb(spark):
@@ -198,61 +196,22 @@ def test_pack_md5_matches_duckdb(spark):
     assert {i: (b, p, pos) for i, b, p, pos in oracle} == got
 
 
-def test_doc_domains_and_blocklist(spark):
-    from voluptuous_spark.textops import (
-        doc_domains,
-        drop_blocklisted,
-        flag_blocklisted,
-    )
-
-    rows = [
-        (0, "see https://Example.com/page and http://sub.example.com/x"),
-        (1, "links to https://ads.evil.com/track?id=1 here"),
-        (2, "mentions https://evil.com twice https://evil.com/a"),
-        (3, "no urls at all"),
-        (4, "https://good.org/path plus http://evil.company.org"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    doms = {(r["doc_id"], r["domain"]) for r in doc_domains(df).collect()}
-    assert (0, "example.com") in doms and (0, "sub.example.com") in doms
-    assert (2, "evil.com") in doms
-    # distinct per doc: evil.com appears once for doc 2
-    assert sum(1 for d in doms if d[0] == 2) == 1
-    assert not any(d[0] == 3 for d in doms)
-
-    flagged = {r["doc_id"]: r["blocked_domain"] for r in
-               flag_blocklisted(df, ["evil.com"]).collect()}
-    assert flagged[1] == "ads.evil.com"  # subdomain blocked
-    assert flagged[2] == "evil.com"
-    assert flagged[0] is None and flagged[3] is None
-    # evil.company.org is NOT a subdomain of evil.com
-    assert flagged[4] is None
-
-    kept = sorted(r["doc_id"] for r in
-                  drop_blocklisted(df, ["evil.com"]).collect())
-    assert kept == [0, 3, 4]
-    # plan: pure projection/filter, no Exchange
-    plan = (flag_blocklisted(df, ["evil.com"])
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "Exchange" not in plan
-
-
 def test_cap_per_domain(spark):
-    from voluptuous_spark.textops import cap_per_domain
-
+    """A per-domain volume cap is ``stratified_take`` on the domain."""
     df = spark.range(1_000).select(
         F.col("id").alias("doc_id"),
         F.when(F.col("id") < 900, "megasite.com")
         .otherwise("small.org").alias("source"),
     )
-    capped = cap_per_domain(df, 50, salt="c")
+    capped = stratified_take(df, "source", 50, salt="c")
     counts = {r["source"]: r["n"] for r in
               capped.groupBy("source").agg(F.count("*").alias("n"))
               .collect()}
     assert counts["megasite.com"] == 50  # mega-site capped
     assert counts["small.org"] == 50
     # deterministic
-    assert capped.exceptAll(cap_per_domain(df, 50, salt="c")).count() == 0
+    assert capped.exceptAll(
+        stratified_take(df, "source", 50, salt="c")).count() == 0
 
 
 def test_pack_assign_default_lanes_track_parallelism(spark):

@@ -15,7 +15,6 @@ import pytest
 from voluptuous_spark.checks.drift import (
     EPS, category_histogram, ks_statistic, psi_report,
 )
-from voluptuous_spark.sampling import split_report
 from voluptuous_spark.datasynth import clips_df, transcripts_df
 from voluptuous_spark.suite import run_suite
 
@@ -128,7 +127,7 @@ def test_category_totals_use_no_window(spark):
     df = spark.createDataFrame(
         [(s,) for s in ["train"] * 8 + ["val", "test", None]], "split string")
     hist = category_histogram(df, "split")
-    for out in (hist, split_report(df), psi_report(df, df, "split")):
+    for out in (hist, psi_report(df, df, "split")):
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "Window" not in plan
     got = {r["value"]: (r["count"], r["ratio"]) for r in hist.collect()}

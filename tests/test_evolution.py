@@ -1,5 +1,5 @@
 """Schema evolution gate: Iceberg-rule classification of schema diffs.
-Pure metadata — no Spark jobs (only evolution_report builds a tiny df)."""
+Pure metadata — no Spark jobs."""
 
 import pytest
 from pyspark.sql import types as T
@@ -7,7 +7,6 @@ from pyspark.sql import types as T
 from voluptuous_spark.evolution import (
     SchemaEvolutionError,
     assert_compatible,
-    breaking_changes,
     schema_changes,
 )
 
@@ -59,20 +58,22 @@ def test_widening_ok_narrowing_breaks():
     assert all(c["change"] == "type_changed" and not c["compatible"]
                for c in back.values())
     # scale change is never compatible
-    sc = breaking_changes(_s("d decimal(10,2)"), _s("d decimal(12,4)"))
-    assert sc and sc[0]["change"] == "type_changed"
+    [sc] = schema_changes(_s("d decimal(10,2)"), _s("d decimal(12,4)"))
+    assert sc["change"] == "type_changed" and not sc["compatible"]
 
 
 def test_retype_breaks():
-    bad = breaking_changes(_s("a int"), _s("a string"))
-    assert bad[0]["change"] == "type_changed"
-    assert "int -> string" in bad[0]["detail"]
+    [bad] = schema_changes(_s("a int"), _s("a string"))
+    assert bad["change"] == "type_changed" and not bad["compatible"]
+    assert "int -> string" in bad["detail"]
 
 
 def test_drop_defaults_breaking_opt_in_allowed():
     old, new = _s("a int, b string"), _s("a int")
-    assert breaking_changes(old, new)[0]["change"] == "column_dropped"
-    assert breaking_changes(old, new, allow_drop=True) == []
+    [drop] = schema_changes(old, new)
+    assert drop["change"] == "column_dropped" and not drop["compatible"]
+    [drop] = schema_changes(old, new, allow_drop=True)
+    assert drop["compatible"]
     assert_compatible(old, new, allow_drop=True)
 
 
@@ -108,20 +109,7 @@ def test_nested_paths():
 
 
 def test_container_vs_scalar_retype():
-    bad = breaking_changes(_s("a array<int>"), _s("a int"))
-    assert bad[0]["change"] == "type_changed"
-    bad2 = breaking_changes(_s("a struct<x:int>"), _s("a array<int>"))
-    assert bad2[0]["change"] == "type_changed"
-
-
-def test_evolution_report_df(spark):
-    from voluptuous_spark.evolution import evolution_report
-
-    rep = evolution_report(
-        spark, _s("a int"), _s("a bigint, b string")
-    ).collect()
-    got = {(r["path"], r["change"], r["compatible"]) for r in rep}
-    assert got == {
-        ("a", "type_widened", True),
-        ("b", "column_added", True),
-    }
+    [bad] = schema_changes(_s("a array<int>"), _s("a int"))
+    assert bad["change"] == "type_changed" and not bad["compatible"]
+    [bad2] = schema_changes(_s("a struct<x:int>"), _s("a array<int>"))
+    assert bad2["change"] == "type_changed" and not bad2["compatible"]

@@ -5,7 +5,6 @@ from pyspark.sql import functions as F
 
 from voluptuous_spark.graph import (
     connected_components,
-    dedup_canonical,
     duplicate_clusters,
 )
 
@@ -78,16 +77,6 @@ def test_duplicate_clusters_and_canonical(spark):
         2: (2, True), 5: (2, False), 9: (2, False),
         7: (7, True), 8: (7, False),
     }
-
-    docs = spark.createDataFrame(
-        [(i, f"d{i}") for i in [1, 2, 5, 7, 8, 9, 42]],
-        "doc_id long, text string",
-    )
-    kept = sorted(
-        r["doc_id"] for r in dedup_canonical(docs, e).collect()
-    )
-    # unclustered docs (1, 42) survive; cluster minima (2, 7) survive
-    assert kept == [1, 2, 7, 42]
 
 
 def test_lsh_to_clusters_composes(spark):

@@ -1,6 +1,6 @@
 """Product quantization ANN (similarity.py PQ section): codebook
-training determinism, ADC-vs-numpy parity, residual IVF-PQ recall, and
-the broadcast/shuffle plan shape."""
+training determinism, ADC-table-vs-numpy parity, residual IVF-PQ recall,
+and the broadcast/shuffle plan shape."""
 
 import random
 
@@ -15,7 +15,7 @@ from voluptuous_spark.similarity import (
     ivf_pq_topk,
     pq_codebooks,
     pq_encode,
-    pq_topk,
+    pq_query_table,
 )
 
 DIM, N, N_CENTERS = 16, 600, 12
@@ -49,6 +49,11 @@ def books(clustered):
     return pq_codebooks(clustered, DIM, m=4, ksub=8, iters=2)
 
 
+@pytest.fixture(scope="module")
+def centroids(clustered):
+    return ivf_centroids(clustered, DIM, k=default_n_clusters(N), iters=2)
+
+
 def test_codebook_shape_and_determinism(clustered, books):
     assert len(books) == 4
     assert all(len(b) == 8 for b in books)
@@ -71,33 +76,31 @@ def test_encode_shape(clustered, books):
 
 
 def test_adc_matches_numpy_reconstruction(clustered, queries, books):
-    """The ADC score is exactly cos(q, x_hat) where x_hat is the
-    codebook reconstruction — verified against numpy to 1e-5."""
-    enc = {r["vec_id"]: r["code"] for r in
+    """ADC: summing the query's lookup table at a vector's codes gives
+    exactly dot(q, x_hat), where x_hat is the codebook reconstruction
+    and ``rnorm`` its norm — verified against numpy to 1e-9."""
+    enc = {r["vec_id"]: (r["code"], r["rnorm"]) for r in
            pq_encode(clustered, books).limit(50).collect()}
-    raw = {r["query_id"]: np.array(r["embedding"]) for r in
-           queries.collect()}
-    got = {
-        (r["query_id"], r["vec_id"]): r["score"]
-        for r in pq_topk(
-            pq_encode(clustered, books), queries, books, k=5
+    qs = {
+        r["query_id"]: (np.array(r["embedding"]), r["qtab"])
+        for r in queries.select(
+            "query_id", "embedding",
+            pq_query_table(F.col("embedding"), books).alias("qtab"),
         ).collect()
     }
     cb = [
         {c: np.array(comp) for c, comp in book} for book in books
     ]
-    for (qid, vid), score in got.items():
-        if vid not in enc:
-            continue
-        x_hat = np.concatenate([cb[j][enc[vid][j]] for j in range(4)])
-        q = raw[qid]
-        exp = float(q @ x_hat / (np.linalg.norm(q) * np.linalg.norm(x_hat)))
-        assert abs(score - exp) < 1e-5, (qid, vid)
+    for vid, (code, rnorm) in enc.items():
+        x_hat = np.concatenate([cb[j][code[j]] for j in range(4)])
+        assert abs(rnorm - np.linalg.norm(x_hat)) < 1e-9, vid
+        for qid, (q, qtab) in qs.items():
+            adc = sum(qtab[j][code[j]] for j in range(4))
+            assert abs(adc - float(q @ x_hat)) < 1e-9, (qid, vid)
 
 
-def test_residual_beats_raw_codes(clustered, queries):
-    """The reason ivf_pq_topk encodes residuals: on clustered data the
-    global raw-vector codebooks collapse each cluster to one code."""
+def test_ivf_pq_topk_recall(clustered, queries, centroids):
+    """Residual IVF-PQ keeps recall@5 against the exact top-k."""
     exact = {}
     for r in brute_force_topk(clustered, queries, k=5).collect():
         exact.setdefault(r["query_id"], set()).add(r["vec_id"])
@@ -110,34 +113,27 @@ def test_residual_beats_raw_codes(clustered, queries):
             len(got.get(k, set()) & v) / len(v) for k, v in exact.items()
         ) / len(exact)
 
-    raw_books = pq_codebooks(clustered, DIM, m=8, ksub=16, iters=2)
-    raw = recall(
-        pq_topk(pq_encode(clustered, raw_books), queries, raw_books, k=5)
-    )
-    kc = default_n_clusters(N)
-    cents = ivf_centroids(clustered, DIM, k=kc, iters=2)
     res = recall(
         ivf_pq_topk(clustered, queries, DIM, k=5, n_probe=4, m=8,
-                    ksub=16, centroids=cents)
+                    ksub=16, centroids=centroids)
     )
     assert res >= 0.6
-    assert res > raw + 0.2  # residual encoding is the difference
 
 
-def test_self_hit_rank_one(clustered, queries, books):
-    """A query that IS a corpus vector must retrieve itself first:
-    ADC(q, code(q)) is the max over codes sharing q's reconstruction."""
+def test_self_hit_rank_one(clustered, queries, centroids):
+    """A query that IS a corpus vector must retrieve itself first."""
     got = {r["query_id"]: r["vec_id"] for r in
-           pq_topk(pq_encode(clustered, books), queries, books, k=1)
-           .collect()}
+           ivf_pq_topk(clustered, queries, DIM, k=1, n_probe=4, m=8,
+                       ksub=16, centroids=centroids).collect()}
     assert sum(1 for k, v in got.items() if k == v) >= 8  # of 10
 
 
-def test_plan_broadcast_and_single_shuffle(clustered, queries, books):
+def test_plan_broadcast_and_single_shuffle(clustered, queries, centroids):
     """The compressed corpus never shuffles: the query side (with ADC
     tables) broadcasts and the ONLY exchange is the top-k window."""
     plan = (
-        pq_topk(pq_encode(clustered, books), queries, books, k=5)
+        ivf_pq_topk(clustered, queries, DIM, k=5, n_probe=4, m=8,
+                    ksub=16, centroids=centroids)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "BroadcastExchange" in plan

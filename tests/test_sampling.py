@@ -6,9 +6,7 @@ from pyspark.sql import functions as F
 
 from voluptuous_spark.sampling import (
     _hex_threshold,
-    hash_split,
     split_assign,
-    split_report,
     stratified_sample,
     stratified_take,
 )
@@ -47,15 +45,6 @@ def test_split_stable_under_corpus_growth(spark):
     b = {r["doc_id"]: r["split"]
          for r in split_assign(big, WEIGHTS, salt="x").collect()}
     assert all(b[k] == v for k, v in s.items())
-
-
-def test_hash_split_partitions_the_corpus(ids):
-    parts = hash_split(ids, WEIGHTS, salt="s1")
-    assert set(parts) == {"train", "val", "test"}
-    total = sum(p.count() for p in parts.values())
-    assert total == 20_000
-    # disjoint
-    assert parts["train"].join(parts["val"], "doc_id").count() == 0
 
 
 def test_md5_basis_matches_duckdb(ids):
@@ -136,8 +125,13 @@ def test_stratified_take_md5_matches_duckdb(spark):
 
 
 def test_split_report(ids):
-    rep = split_report(split_assign(ids, WEIGHTS, salt="s1")).collect()
-    fr = {r["split"]: r["fraction"] for r in rep}
+    """Per-label fractions of an assignment are ``category_histogram``
+    over the label column."""
+    from voluptuous_spark.checks.drift import category_histogram
+
+    rep = category_histogram(
+        split_assign(ids, WEIGHTS, salt="s1"), "split").collect()
+    fr = {r["value"]: r["ratio"] for r in rep}
     assert abs(sum(fr.values()) - 1.0) < 1e-9
     assert fr["train"] > fr["val"]
 

@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from voluptuous_spark.checkpoint import CheckpointedValidation
 from voluptuous_spark.checks.sketches import (
-    bin_midpoint,
     column_sketches,
     log_bin_expr,
     merge_sketches,
@@ -131,10 +130,6 @@ def test_sign_zero_nan_bins(spark):
     assert bins[2] == 0
     assert bins[3] > 0 and bins[1] == -bins[3]
     assert bins[4] is None and bins[5] is None
-    # midpoint inverts the bin within the half-bin bound
-    assert bin_midpoint(bins[3]) == pytest.approx(8.0, rel=2 ** (1 / 16) - 1)
-    assert bin_midpoint(bins[1]) == pytest.approx(-8.0, rel=2 ** (1 / 16) - 1)
-    assert bin_midpoint(0) == 0.0
 
     m = _merged_map(
         merge_sketches(column_sketches(df, ["v"]), quantiles=(0.5,))

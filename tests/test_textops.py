@@ -10,7 +10,6 @@ from voluptuous_spark.similarity import (
 )
 from voluptuous_spark.textops import (
     _dense_ranks,
-    exact_duplicates,
     language_id,
     minhash_lsh_candidates,
     ngram_jaccard_pairs,
@@ -35,28 +34,29 @@ def docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_exact_duplicates(docs):
-    d = exact_duplicates(docs).collect()
-    assert len(d) == 1
-    assert d[0]["dup_count"] == 3  # 0, 1 and whitespace/case-normalized 6
-    assert d[0]["canonical_id"] == 0
-    assert d[0]["sample_ids"] == [0, 1, 6]
+def test_exact_duplicates(docs, tmp_path):
+    """Exact dedup is the ``doc_profile`` query's inline columns: the md5
+    of the normalized text, grouped by a window."""
+    import sys
+    from pathlib import Path
 
+    root = str(Path(__file__).resolve().parents[1])
+    if root not in sys.path:
+        sys.path.insert(0, root)
+    import __spark_entry__
 
-def test_exact_duplicates_fat_group_capped(spark):
-    # a boilerplate doc duplicated 10^5 times: the aggregate buffers at
-    # most max_sample_ids ids, never the whole group (round-3 verdict
-    # "What's wrong" #1 — unbounded collect_list is the skew trap)
-    n = 100_000
-    df = spark.range(n).select(
-        F.col("id").alias("doc_id"), F.lit("same boilerplate").alias("text")
-    )
-    rows = exact_duplicates(df, max_sample_ids=16).collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert r["dup_count"] == n
-    assert r["canonical_id"] == 0
-    assert r["sample_ids"] == list(range(16))
+    docs.write.parquet(str(tmp_path / "documents.parquet"))
+    rows = {r["doc_id"]: r for r in
+            __spark_entry__._doc_profile(docs.sparkSession, str(tmp_path))
+            .collect()}
+    # 0, 1 and whitespace/case-normalized 6 form the one duplicate group
+    group = {i for i, r in rows.items() if r["dup_count"] > 1}
+    assert group == {0, 1, 6}
+    assert {rows[i]["dup_count"] for i in group} == {3}
+    assert {rows[i]["canonical_id"] for i in group} == {0}
+    assert len({rows[i]["fingerprint"] for i in group}) == 1
+    assert all(r["canonical_id"] == i for i, r in rows.items()
+               if i not in group)
 
 
 def test_jaccard_near_dups(docs):

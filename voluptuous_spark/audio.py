@@ -509,9 +509,8 @@ def _gate_conditions(
     max_dc_offset: float = 0.02,
     min_zcr: float = 0.0,
 ) -> list:
-    """(gate_name, fail_condition) per signal quality gate — the single
-    source of thresholds shared by ``audio_quality_violations`` (violation
-    rows) and ``audio_gate_labels`` (per-row label column, join-free)."""
+    """(gate_name, fail_condition) per signal quality gate — the
+    thresholds behind ``audio_gate_labels``."""
     return [
         ("rms_db", F.col("rms_db") < min_rms_db),
         ("clipping_ratio", F.col("clipping_ratio") > max_clipping_ratio),
@@ -538,104 +537,6 @@ def audio_gate_labels(**thresholds) -> Column:
     )
 
 
-def audio_quality_violations(
-    features: DataFrame,
-    id_col: str = "clip_id",
-    min_rms_db: float = -60.0,
-    max_clipping_ratio: float = 0.01,
-    max_dc_offset: float = 0.02,
-    min_zcr: float = 0.0,
-) -> DataFrame:
-    """Quality-gate violations over an ``audio_features`` output — pure
-    Column expressions (one codegen stage, zero shuffles), same row shape
-    as the suite's violations table. One row per failed gate so a clip
-    that is both silent AND DC-biased reports both defects."""
-    def _viol(cond, path, message, offending):
-        return F.when(
-            cond,
-            F.struct(
-                F.array(F.lit(path)).alias("path"),
-                message.alias("message"),
-                F.lit("ValueInvalid").alias("error_type"),
-                offending.cast("string").alias("offending"),
-            ),
-        ).otherwise(F.lit(None))
-
-    conds = dict(_gate_conditions(
-        min_rms_db, max_clipping_ratio, max_dc_offset, min_zcr
-    ))
-    entries = F.array(
-        _viol(
-            conds["rms_db"],
-            "rms_db",
-            F.format_string(
-                "clip is silent or near-silent (RMS %sdB < %sdB floor)",
-                F.round("rms_db", 1).cast("string"),
-                F.lit(str(min_rms_db)),
-            ),
-            F.col("rms_db"),
-        ),
-        _viol(
-            conds["clipping_ratio"],
-            "clipping_ratio",
-            F.format_string(
-                "clip is clipped (%s%% of samples at full scale)",
-                F.round(F.col("clipping_ratio") * 100, 2).cast("string"),
-            ),
-            F.col("clipping_ratio"),
-        ),
-        _viol(
-            conds["dc_offset"],
-            "dc_offset",
-            F.format_string(
-                "clip has DC offset %s (|offset| > %s)",
-                F.round("dc_offset", 4).cast("string"),
-                F.lit(str(max_dc_offset)),
-            ),
-            F.col("dc_offset"),
-        ),
-        _viol(
-            conds["zcr"],
-            "zcr",
-            F.format_string(
-                "clip activity too low (zero-crossing rate %s < %s)",
-                F.round("zcr", 5).cast("string"),
-                F.lit(str(min_zcr)),
-            ),
-            F.col("zcr"),
-        ),
-    )
-    e = F.explode(F.filter(entries, lambda x: x.isNotNull())).alias("e")
-    return features.filter(F.col("rms_db").isNotNull()).select(
-        id_col, e
-    ).select(
-        id_col,
-        F.col("e.path").alias("path"),
-        F.col("e.message").alias("message"),
-        F.col("e.error_type").alias("error_type"),
-        F.col("e.offending").alias("offending"),
-    )
-
-
-def audio_feature_report(features: DataFrame) -> DataFrame:
-    """Corpus-level distribution of the signal features: ONE hash
-    aggregation (map-side partial + final, no sort), the scale-safe shape
-    for a 10^12-row feature table."""
-    return features.filter(F.col("rms_db").isNotNull()).agg(
-        F.count(F.lit(1)).alias("n_clips"),
-        F.avg("rms_db").alias("avg_rms_db"),
-        F.min("rms_db").alias("min_rms_db"),
-        F.max("peak_db").alias("max_peak_db"),
-        F.avg("clipping_ratio").alias("avg_clipping_ratio"),
-        F.avg(F.abs("dc_offset")).alias("avg_abs_dc_offset"),
-        F.avg("zcr").alias("avg_zcr"),
-        F.avg((F.col("rms_db") < -60.0).cast("double")).alias("silent_rate"),
-        F.avg((F.col("clipping_ratio") > 0.01).cast("double")).alias(
-            "clipped_rate"
-        ),
-    )
-
-
 # ---------------------------------------------------------------------------
 # joint audio <-> transcript consistency gates (the graft's A+B axes).
 #
@@ -659,9 +560,8 @@ def transcript_gate_conditions(
     dur_col: str = "dur_ms",
     energy_gates: bool = True,
 ) -> list:
-    """(gate_name, fail_condition) per joint gate — single threshold
-    source shared by ``transcript_gate_labels`` (per-row label column)
-    and ``transcript_consistency_violations`` (violation rows).
+    """(gate_name, fail_condition) per joint gate — the thresholds
+    behind ``transcript_gate_labels``.
 
     Rate gates (``cps_high`` / ``cps_low`` / ``transcript_empty``) read
     only metadata columns and apply to every row; the energy gates
@@ -737,267 +637,6 @@ def transcript_rate_check_expr(
             ),
         )
         .otherwise(F.lit(None).cast(StringType()))
-    )
-
-
-def transcript_consistency_violations(
-    features: DataFrame,
-    id_col: str = "clip_id",
-    **thresholds,
-) -> DataFrame:
-    """Joint-gate violations over an ``audio_features`` output — pure
-    Column expressions, one row per failed gate, same row shape as the
-    suite's violations table."""
-    conds = dict(transcript_gate_conditions(**thresholds))
-    msgs = {
-        "active_empty":
-            "audio has energy but transcript is empty",
-        "cps_high":
-            "transcript rate above plausible speaking rate",
-        "cps_low":
-            "transcript rate below plausible speaking rate",
-        "silent_transcribed":
-            "audio is silent but a transcript is present",
-        "transcript_empty":
-            "transcript is empty",
-    }
-    entries = F.array(*[
-        F.when(
-            conds[name],
-            F.struct(
-                F.array(F.lit("transcript")).alias("path"),
-                F.lit(msgs[name]).alias("message"),
-                F.lit("ValueInvalid").alias("error_type"),
-                F.lit(name).alias("offending"),
-            ),
-        ).otherwise(F.lit(None))
-        for name in sorted(conds)
-    ])
-    e = F.explode(F.filter(entries, lambda x: x.isNotNull())).alias("e")
-    return features.select(id_col, e).select(
-        id_col,
-        F.col("e.path").alias("path"),
-        F.col("e.message").alias("message"),
-        F.col("e.error_type").alias("error_type"),
-        F.col("e.offending").alias("offending"),
-    )
-
-
-SPECTRAL_FEATURE_COLS = (
-    "dominant_hz", "spectral_centroid_hz", "spectral_bandwidth_hz",
-    "spectral_flatness", "spectral_rolloff_hz",
-)
-
-
-def _spectral_one(buf, codec, n_fft=2048):
-    """Spectral features for one clip via an averaged Hann-windowed power
-    spectrum (Welch without overlap — one rfft per n_fft block, all
-    vectorized numpy, no per-sample Python):
-
-      dominant_hz           argmax power bin (DC excluded)
-      spectral_centroid_hz  power-weighted mean frequency
-      spectral_bandwidth_hz power-weighted std dev around the centroid
-      spectral_flatness     geometric/arithmetic mean of power (DC
-                            excluded): ~0 tonal, ->1 white noise
-      spectral_rolloff_hz   85th-percentile cumulative-power frequency
-
-    Returns all-None when the payload is absent/undecodable/non-PCM, and
-    all-0.0 for digital silence (no power to locate)."""
-    if buf is None or (codec is not None and codec != "wav"):
-        return (None,) * len(SPECTRAL_FEATURE_COLS)
-    try:
-        s, sr = decode_wav_numpy(memoryview(buf))
-    except ValueError:
-        return (None,) * len(SPECTRAL_FEATURE_COLS)
-    n = int(s.shape[0])
-    if n == 0:
-        return (0.0,) * len(SPECTRAL_FEATURE_COLS)
-    a = s.astype(np.float64)
-    if n < n_fft:
-        a = np.pad(a, (0, n_fft - n))
-    k = a.shape[0] // n_fft
-    blocks = a[: k * n_fft].reshape(k, n_fft) * np.hanning(n_fft)
-    power = np.mean(np.abs(np.fft.rfft(blocks, axis=1)) ** 2, axis=0)
-    freqs = np.fft.rfftfreq(n_fft, d=1.0 / sr)
-    p = power[1:]  # exclude DC for every statistic
-    f = freqs[1:]
-    total = float(np.sum(p))
-    if total <= 0.0:
-        return (0.0,) * len(SPECTRAL_FEATURE_COLS)
-    dominant = float(f[int(np.argmax(p))])
-    centroid = float(np.dot(f, p) / total)
-    bandwidth = float(np.sqrt(np.dot((f - centroid) ** 2, p) / total))
-    logp = np.log(p + 1e-30)
-    flatness = float(np.exp(np.mean(logp)) / (total / p.shape[0]))
-    rolloff = float(f[int(np.searchsorted(np.cumsum(p), 0.85 * total))])
-    return (dominant, centroid, bandwidth, flatness, rolloff)
-
-
-def audio_spectral_features(
-    df: DataFrame,
-    bytes_col: str = "bytes",
-    codec_col: str = "codec",
-    n_fft: int = 2048,
-    drop_bytes: bool = True,
-) -> DataFrame:
-    """Per-clip spectral features via ``mapInArrow`` — same zero-copy
-    single-pass shape as ``audio_features``: the payload crosses the
-    JVM->Python boundary once, reduces to five narrow doubles, and is
-    dropped from the output batch. The FFT work is O(n log n_fft) per
-    clip and embarrassingly parallel — the correct 10^12-row shape.
-    No reference analog (voluptuous has no audio notion); this is the
-    training-data tier: tonal-artifact / hum / bandwidth-limited-upload
-    detection that RMS-level gates cannot see."""
-    import pyarrow as pa
-
-    out_fields = [
-        fld for fld in df.schema.fields
-        if not (drop_bytes and fld.name == bytes_col)
-    ]
-    keep_names = [fld.name for fld in out_fields]
-    out_schema_ddl = ", ".join(
-        f"`{fld.name}` {fld.dataType.simpleString()}" for fld in out_fields
-    ) + ", " + ", ".join(f"`{c}` double" for c in SPECTRAL_FEATURE_COLS)
-
-    def gen(batches):
-        for batch in batches:
-            bcol = batch.column(batch.schema.get_field_index(bytes_col))
-            codec = batch.column(
-                batch.schema.get_field_index(codec_col)
-            ).to_pylist()
-            feats = []
-            for i in range(batch.num_rows):
-                sc = bcol[i]
-                feats.append(_spectral_one(
-                    sc.as_buffer() if sc.is_valid else None, codec[i],
-                    n_fft,
-                ))
-            cols = [
-                batch.column(batch.schema.get_field_index(nm))
-                for nm in keep_names
-            ]
-            yield pa.RecordBatch.from_arrays(
-                cols + [
-                    pa.array([ft[j] for ft in feats], type=pa.float64())
-                    for j in range(len(SPECTRAL_FEATURE_COLS))
-                ],
-                names=keep_names + list(SPECTRAL_FEATURE_COLS),
-            )
-
-    return df.mapInArrow(gen, out_schema_ddl)
-
-
-def audio_spectral_violations(
-    features: DataFrame,
-    id_col: str = "clip_id",
-    hum_hz: tuple = (50.0, 60.0),
-    hum_tolerance_hz: float = 8.0,
-    max_hum_flatness: float = 0.05,
-    min_rolloff_hz: float = 3500.0,
-    min_bandwidth_hz: float = 100.0,
-) -> DataFrame:
-    """Spectral quality gates over an ``audio_spectral_features`` output —
-    pure Column expressions (one codegen stage, zero shuffles), same row
-    shape as the suite violations. Catches recording-chain defects level
-    gates cannot see:
-
-      hum          mains interference: dominant at 50/60 Hz (+-tol; the
-                   default tolerance covers one FFT bin at n_fft=2048 /
-                   16 kHz) with near-tonal flatness
-      bandlimited  rolloff below ``min_rolloff_hz`` — telephone-band or
-                   re-encoded/upsampled material posing as wideband
-      narrowband   bandwidth under ``min_bandwidth_hz`` — a bare test
-                   tone, not speech/music
-
-    A hum verdict suppresses the other two gates for that clip: a
-    hum-dominated spectrum is trivially band-limited and narrowband, and
-    the actionable diagnosis is the hum."""
-    def _viol(cond, path, message, offending):
-        return F.when(
-            cond,
-            F.struct(
-                F.array(F.lit(path)).alias("path"),
-                message.alias("message"),
-                F.lit("ValueInvalid").alias("error_type"),
-                offending.cast("string").alias("offending"),
-            ),
-        ).otherwise(F.lit(None))
-
-    dom = F.col("dominant_hz")
-    near_mains = F.lit(False)
-    for hz in hum_hz:
-        near_mains = near_mains | (F.abs(dom - F.lit(hz)) <= hum_tolerance_hz)
-    is_hum = (
-        near_mains & (F.col("spectral_flatness") < max_hum_flatness)
-        & (dom > 0)
-    )
-    entries = F.array(
-        _viol(
-            is_hum,
-            "dominant_hz",
-            F.format_string(
-                "mains hum: dominant frequency %sHz",
-                F.round(dom, 1).cast("string"),
-            ),
-            dom,
-        ),
-        _viol(
-            (F.col("spectral_rolloff_hz") < min_rolloff_hz)
-            & (F.col("spectral_rolloff_hz") > 0) & ~is_hum,
-            "spectral_rolloff_hz",
-            F.format_string(
-                "band-limited audio: 85%% of power below %sHz",
-                F.round("spectral_rolloff_hz", 1).cast("string"),
-            ),
-            F.col("spectral_rolloff_hz"),
-        ),
-        _viol(
-            (F.col("spectral_bandwidth_hz") < min_bandwidth_hz)
-            & (F.col("spectral_bandwidth_hz") > 0) & ~is_hum,
-            "spectral_bandwidth_hz",
-            F.format_string(
-                "narrowband tone: spectral bandwidth %sHz",
-                F.round("spectral_bandwidth_hz", 1).cast("string"),
-            ),
-            F.col("spectral_bandwidth_hz"),
-        ),
-    )
-    e = F.explode(F.filter(entries, lambda x: x.isNotNull())).alias("e")
-    return features.filter(F.col("dominant_hz").isNotNull()).select(
-        id_col, e
-    ).select(
-        id_col,
-        F.col("e.path").alias("path"),
-        F.col("e.message").alias("message"),
-        F.col("e.error_type").alias("error_type"),
-        F.col("e.offending").alias("offending"),
-    )
-
-
-def transcript_equality_violations(
-    clips: DataFrame,
-    transcripts: DataFrame,
-    key: str = "clip_id",
-    col: str = "transcript",
-    broadcast_side: bool = False,
-) -> DataFrame:
-    """Cross-table transcript equality (north star): clips whose transcript
-    differs from the transcripts side table. Inner join on clip_id (one
-    shuffle, or broadcast), null-safe inequality — all JVM-side."""
-    t = transcripts.select(
-        F.col(key), F.col(col).alias("__expected")
-    )
-    if broadcast_side:
-        t = F.broadcast(t)
-    return (
-        clips.select(key, col)
-        .join(t, on=key, how="inner")
-        .filter(~F.col(col).eqNullSafe(F.col("__expected")))
-        .select(
-            key,
-            F.lit("transcript does not match reference").alias("message"),
-            F.lit("ValueInvalid").alias("error_type"),
-        )
     )
 
 
@@ -1653,13 +1292,10 @@ def audio_normalize_gain(
 
 
 # ---------------------------------------------------------------------------
-# energy-based activity detection: per-clip active spans + silence trim.
-# Speech-corpus curation needs both the ANALYSIS (where is the energy —
-# leading/trailing dead air, long internal pauses, fraction of the clip
-# that is actually speech) and the TRANSFORM (cut the dead air so storage,
-# decode time and downstream fingerprints track content, not padding).
-# Frame verdicts are RMS-threshold decisions over fixed frames — exact
-# integer closed forms of the samples, so tests pin spans to the sample.
+# energy-based silence trim: cut the dead air so storage, decode time and
+# downstream fingerprints track content, not padding. Frame verdicts are
+# RMS-threshold decisions over fixed frames — exact integer closed forms
+# of the samples, so tests pin the trimmed slice to the sample.
 
 
 def _activity_spans_one(
@@ -1689,76 +1325,6 @@ def _activity_spans_one(
         (int(starts[int(edges[k])]), int(ends[int(edges[k + 1]) - 1]))
         for k in range(0, edges.shape[0], 2)
     ]
-
-
-def audio_activity_spans(
-    df: DataFrame,
-    frame_ms: int = 20,
-    threshold_dbfs: float = -50.0,
-    bytes_col: str = "bytes",
-    codec_col: str = "codec",
-    id_cols: tuple[str, ...] = ("clip_id",),
-) -> DataFrame:
-    """One row per merged active span: id columns + ``span_idx``,
-    ``start_ms``, ``end_ms``, ``span_ms``. Undecodable/non-PCM clips emit
-    zero rows; fully-silent clips emit zero rows (their absence IS the
-    verdict — join back against the corpus for a silent-clip report).
-    One zero-copy ``mapInArrow`` fan-out, payload dropped; row fan-out is
-    bounded by clip duration / frame_ms."""
-    import pyarrow as pa
-
-    id_fields = [f for f in df.schema.fields if f.name in id_cols]
-    ddl = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in id_fields
-    ) + ", `span_idx` int, `start_ms` long, `end_ms` long, `span_ms` long"
-
-    def gen(batches):
-        for batch in batches:
-            bcol = batch.column(batch.schema.get_field_index(bytes_col))
-            codec = batch.column(
-                batch.schema.get_field_index(codec_col)
-            ).to_pylist()
-            ids = {
-                f.name: batch.column(
-                    batch.schema.get_field_index(f.name)
-                ).to_pylist()
-                for f in id_fields
-            }
-            out: dict[str, list] = {f.name: [] for f in id_fields}
-            for c in ("span_idx", "start_ms", "end_ms", "span_ms"):
-                out[c] = []
-            for i in range(batch.num_rows):
-                sc = bcol[i]
-                if not sc.is_valid or (
-                    codec[i] is not None and codec[i] != "wav"
-                ):
-                    continue
-                try:
-                    s, sr = decode_wav_numpy(memoryview(sc.as_buffer()))
-                except ValueError:
-                    continue
-                for j, (k0, k1) in enumerate(_activity_spans_one(
-                        s, sr, frame_ms, threshold_dbfs)):
-                    t0, t1 = k0 * 1000 // sr, k1 * 1000 // sr
-                    for f in id_fields:
-                        out[f.name].append(ids[f.name][i])
-                    out["span_idx"].append(j)
-                    out["start_ms"].append(t0)
-                    out["end_ms"].append(t1)
-                    out["span_ms"].append(t1 - t0)
-            names: list = []
-            arrays = []
-            for f in id_fields:
-                arrays.append(pa.array(out[f.name]))
-                names.append(f.name)
-            arrays.append(pa.array(out["span_idx"], type=pa.int32()))
-            names.append("span_idx")
-            for c in ("start_ms", "end_ms", "span_ms"):
-                arrays.append(pa.array(out[c], type=pa.int64()))
-                names.append(c)
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
-
-    return df.mapInArrow(gen, ddl)
 
 
 def audio_trim_silence(
@@ -1835,104 +1401,3 @@ def audio_trim_silence(
             yield pa.RecordBatch.from_arrays(arrays, names=names)
 
     return df.mapInArrow(gen, out_schema_ddl)
-
-
-def transcript_label_conflicts(
-    df: DataFrame,
-    id_col: str = "clip_id",
-    bytes_col: str = "bytes",
-    codec_col: str = "codec",
-    transcript_col: str = "transcript",
-    max_sample_ids: int = 8,
-) -> DataFrame:
-    """Cross-modal label-conflict detection: groups of clips whose AUDIO
-    CONTENT is identical (exact decoded-sample signature — container
-    metadata can't split a group) but whose transcripts DISAGREE after
-    normalization. Identical-audio/different-label rows are the
-    highest-value curation find in an ASR corpus: at least all-but-one
-    label in the group is wrong.
-
-    One Arrow pass for the signature + ONE shuffle keyed by the 48-byte
-    signature (window partitionBy reuses the same exchange for ordering
-    the id sample); the per-group aggregation buffers at most
-    ``max_sample_ids`` ids and the set of distinct 32-byte transcript
-    hashes (bounded by the number of DISTINCT labels in the group, not
-    the group size). Returns one row per conflicting group:
-    (canonical_id, n_clips, n_transcripts, sample_ids)."""
-    from pyspark.sql import Window
-
-    from .textops import normalize_text
-
-    sig = audio_content_signature(df, bytes_col, codec_col).filter(
-        F.col("sig_n").isNotNull()
-    )
-    base = sig.select(
-        id_col,
-        *AUDIO_SIGNATURE_COLS,
-        F.md5(F.coalesce(normalize_text(F.col(transcript_col)), F.lit("")))
-        .alias("__tfp"),
-    )
-    w = Window.partitionBy(*AUDIO_SIGNATURE_COLS).orderBy(id_col)
-    return (
-        base.withColumn("__rn", F.row_number().over(w))
-        .groupBy(*AUDIO_SIGNATURE_COLS)
-        .agg(
-            F.count(F.lit(1)).alias("n_clips"),
-            F.count_distinct("__tfp").alias("n_transcripts"),
-            F.min(id_col).alias("canonical_id"),
-            F.sort_array(
-                F.collect_list(
-                    F.when(F.col("__rn") <= max_sample_ids, F.col(id_col))
-                )
-            ).alias("sample_ids"),
-        )
-        .filter((F.col("n_clips") > 1) & (F.col("n_transcripts") > 1))
-        .select("canonical_id", "n_clips", "n_transcripts", "sample_ids")
-    )
-
-
-def rerecorded_transcripts(
-    df: DataFrame,
-    id_col: str = "clip_id",
-    bytes_col: str = "bytes",
-    codec_col: str = "codec",
-    transcript_col: str = "transcript",
-    max_sample_ids: int = 8,
-) -> DataFrame:
-    """The mirror image of ``transcript_label_conflicts``: transcripts
-    recorded more than once with DIFFERENT audio content (multiple
-    takes / re-reads of the same prompt). Not an error by itself, but a
-    dedup-policy decision (keep all takes? keep best-SNR?) and a leakage
-    hazard if takes straddle a train/eval split. Same plan shape, keyed
-    by the normalized transcript hash instead of the audio signature.
-    Returns (transcript_fp, n_clips, n_audio_versions, canonical_id,
-    sample_ids) for transcripts with >1 distinct audio content."""
-    from pyspark.sql import Window
-
-    from .textops import normalize_text
-
-    sig = audio_content_signature(df, bytes_col, codec_col).filter(
-        F.col("sig_n").isNotNull()
-    )
-    base = sig.select(
-        id_col,
-        F.md5(F.coalesce(normalize_text(F.col(transcript_col)), F.lit("")))
-        .alias("transcript_fp"),
-        F.xxhash64(*AUDIO_SIGNATURE_COLS).alias("__afp"),
-    )
-    w = Window.partitionBy("transcript_fp").orderBy(id_col)
-    return (
-        base.withColumn("__rn", F.row_number().over(w))
-        .groupBy("transcript_fp")
-        .agg(
-            F.count(F.lit(1)).alias("n_clips"),
-            F.count_distinct("__afp").alias("n_audio_versions"),
-            F.min(id_col).alias("canonical_id"),
-            F.sort_array(
-                F.collect_list(
-                    F.when(F.col("__rn") <= max_sample_ids, F.col(id_col))
-                )
-            ).alias("sample_ids"),
-        )
-        .filter(F.col("n_audio_versions") > 1)
-    )

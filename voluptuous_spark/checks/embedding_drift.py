@@ -1,7 +1,7 @@
 """Embedding-space drift: did this week's embedding distribution move?
 
-Scalar drift checks (drift.py) can't see a 64-dim column. Two
-complementary signals, both deterministic and scan-shaped:
+Scalar drift checks (drift.py) can't see a 64-dim column. The signal
+here is deterministic and scan-shaped:
 
 - **Projection PSI** — project every vector onto ``n_planes`` fixed
   pseudo-random directions (the same hash-derived SRP plane generator
@@ -12,12 +12,10 @@ complementary signals, both deterministic and scan-shaped:
   (Johnson–Lindenstrauss), so a shift in any direction of the embedding
   distribution shows up in some projection's PSI; per-plane rows name
   which.
-- **Mean shift** — cosine between the two corpora's mean vectors and
-  the ratio of mean norms. One ``avg`` aggregate per side (dim doubles
-  to the driver), catches global translation/renormalization (e.g. an
-  encoder version bump) that per-direction PSI can under-weight.
 
-Both are ONE narrow aggregation per input; nothing shuffles vectors.
+Each plane is ONE narrow aggregation per input; nothing shuffles
+vectors. ``streaming.validate_stream.streaming_embedding_psi`` is the
+incremental form of the same bucketing.
 """
 
 from __future__ import annotations
@@ -90,91 +88,3 @@ def embedding_psi(
         ).select(F.lit(p).alias("plane"), "psi", "n_categories")
         out = row if out is None else out.unionByName(row)
     return out
-
-
-def embedding_mean_shift(
-    ref: DataFrame,
-    cur: DataFrame,
-    dim: int,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Single row: cosine between mean vectors, mean-norm ratio
-    (cur/ref), and both corpus sizes. A same-distribution pair sits at
-    mean_cosine ~= 1, norm_ratio ~= 1 — PROVIDED the mean is real: for
-    a corpus centered at the origin the sample mean is pure noise with
-    norm ~ sqrt(dim/n), and a ratio/cosine of two noise vectors says
-    nothing. Both signals are therefore nulled when either mean norm
-    sits under 3x its own noise floor (real encoder embeddings are
-    strongly non-centered, so the guard only trips on genuinely
-    centered data, where projection PSI is the reliable signal)."""
-    def mean_vec(df):
-        e = df.withColumn(vec_col, F.col(vec_col).cast("array<double>"))
-        v = F.col(vec_col)
-        return e.agg(*[
-            F.avg(v[i]).alias(f"m{i}") for i in range(dim)
-        ], F.count("*").alias("n"), F.avg(
-            F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x)
-        ).alias("sq")).collect()[0]
-
-    ra, rb = mean_vec(ref), mean_vec(cur)
-    va = [ra[f"m{i}"] for i in range(dim)]
-    vb = [rb[f"m{i}"] for i in range(dim)]
-    dot = sum(x * y for x, y in zip(va, vb))
-    na = sum(x * x for x in va) ** 0.5
-    nb = sum(x * x for x in vb) ** 0.5
-
-    def floor(r):
-        # E||mean||^2 = sum_i var_i / n <= E||x||^2 / n; 3x for slack
-        return 3.0 * (r["sq"] / max(r["n"], 1)) ** 0.5
-
-    meaningful = na > floor(ra) and nb > floor(rb)
-    spark = ref.sparkSession
-    return spark.createDataFrame(
-        [(
-            float(dot / (na * nb)) if meaningful else None,
-            float(nb / na) if meaningful else None,
-            ra["n"], rb["n"],
-        )],
-        "mean_cosine double, norm_ratio double, n_ref long, n_cur long",
-    )
-
-
-def embedding_drift_report(
-    ref: DataFrame,
-    cur: DataFrame,
-    dim: int,
-    n_planes: int = 8,
-    psi_threshold: float = 0.2,
-    norm_ratio_tol: float = 0.02,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(check, value, drifted) rows: one per projection PSI plus
-    mean_cosine AND norm_ratio — the roll-up a validation suite gates
-    on. The norm_ratio row is what catches a pure rescaling of
-    non-centered embeddings (norm_ratio != 1 while mean_cosine ~= 1 and
-    projection PSI may stay quiet if the buckets absorb the scale).
-    The conventional PSI reading: < 0.1 stable, 0.1-0.2 moderate,
-    > 0.2 drifted (the default threshold)."""
-    psi = embedding_psi(ref, cur, dim, n_planes, vec_col=vec_col).select(
-        F.concat(F.lit("proj_psi_"), F.col("plane").cast("string"))
-        .alias("check"),
-        F.col("psi").alias("value"),
-        (F.col("psi") > psi_threshold).alias("drifted"),
-    )
-    shift = embedding_mean_shift(ref, cur, dim, vec_col)
-    ms = shift.select(
-        F.lit("mean_cosine").alias("check"),
-        F.col("mean_cosine").alias("value"),
-        # null mean_cosine = centered corpora, mean is noise -> no claim
-        F.coalesce(F.col("mean_cosine") < 0.98, F.lit(False))
-        .alias("drifted"),
-    )
-    nr = shift.select(
-        F.lit("norm_ratio").alias("check"),
-        F.col("norm_ratio").alias("value"),
-        # same noise-floor null-guard as mean_cosine
-        F.coalesce(
-            F.abs(F.col("norm_ratio") - 1.0) > norm_ratio_tol, F.lit(False)
-        ).alias("drifted"),
-    )
-    return psi.unionByName(ms).unionByName(nr)

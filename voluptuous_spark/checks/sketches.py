@@ -59,13 +59,6 @@ from pyspark.sql import types as T
 # ~5e-20 .. 1.8e19; doubles outside clamp to the edge bins
 EXP_SPAN = 64
 
-SKETCH_FIELDS = (
-    "column string, n_rows long, null_count long, "
-    "min_num double, max_num double, sum1 double, sum2 double, "
-    "min_str string, max_str string, hll binary, hist map<int,long>"
-)
-
-
 def _is_numeric(dt: T.DataType) -> bool:
     return isinstance(dt, T.NumericType) and not isinstance(
         dt, T.DecimalType
@@ -94,17 +87,6 @@ def log_bin_expr(col, bins_per_octave: int = 8):
         .when(x > 0, mag)
         .otherwise(-mag)
     )
-
-
-def bin_midpoint(bin_id: int, bins_per_octave: int = 8) -> float:
-    """Geometric midpoint of a log bin — the quantile estimate for any
-    rank that lands in it (relative error <= half a bin width)."""
-    if bin_id == 0:
-        return 0.0
-    lo = -EXP_SPAN * bins_per_octave
-    e = abs(bin_id) - 1 + lo
-    v = 2.0 ** ((e + 0.5) / bins_per_octave)
-    return v if bin_id > 0 else -v
 
 
 def column_sketches(

@@ -4,8 +4,8 @@ Mirrors the reference error surface (voluptuous ``error.py:15-219``,
 ``humanize.py:10-57``) as *data* instead of exceptions:
 
 - one row in a DataFrame may accumulate many violations (the reference's
-  ``MultipleInvalid``, error.py:60-87) -> an ``array<violation_struct>``
-  column, later exploded into a violations DataFrame;
+  ``MultipleInvalid``, error.py:60-87) -> an array column of
+  ``VIOLATION_SCHEMA`` structs, later exploded into a violations DataFrame;
 - each violation carries ``(path, message, error_type, offending)``
   matching ``Invalid(msg, path, error_message, error_type)``
   (error.py:15-35);
@@ -105,18 +105,6 @@ def truncate_repr(col: Column) -> Column:
         F.length(col) > cap,
         F.concat(F.substring(col, 1, cap - 3), F.lit("...")),
     ).otherwise(col)
-
-
-def violation_struct(
-    path: list[str], err: Column, offending: Column
-) -> Column:
-    """Wrap an inner err struct into the full violation struct."""
-    return F.struct(
-        F.array(*[F.lit(p) for p in path]).alias("path"),
-        err["message"].alias("message"),
-        err["error_type"].alias("error_type"),
-        truncate_repr(offending).alias("offending"),
-    )
 
 
 def py_repr_col(col: Column, spark_type) -> Column:

@@ -29,8 +29,6 @@ in an array<struct<...>> is reported at its exact path.
 
 from __future__ import annotations
 
-import typing
-
 from pyspark.sql import types as T
 
 
@@ -163,15 +161,6 @@ def schema_changes(
     return out
 
 
-def breaking_changes(
-    old: T.StructType, new: T.StructType, allow_drop: bool = False
-) -> list[dict]:
-    return [
-        c for c in schema_changes(old, new, allow_drop=allow_drop)
-        if not c["compatible"]
-    ]
-
-
 def assert_compatible(
     old: T.StructType, new: T.StructType, allow_drop: bool = False
 ) -> list[dict]:
@@ -184,17 +173,3 @@ def assert_compatible(
     if bad:
         raise SchemaEvolutionError(bad)
     return changes
-
-
-def evolution_report(
-    spark, old: T.StructType, new: T.StructType, allow_drop: bool = False
-):
-    """The change list as a DataFrame (path, change, compatible, detail)
-    for writing next to a validation run's other outputs."""
-    rows = [
-        (c["path"], c["change"], bool(c["compatible"]), c["detail"])
-        for c in schema_changes(old, new, allow_drop=allow_drop)
-    ]
-    return spark.createDataFrame(
-        rows, "path string, change string, compatible boolean, detail string"
-    )

@@ -190,18 +190,3 @@ def duplicate_clusters(
         "cluster_id",
         (F.col("id") == F.col("cluster_id")).alias("is_canonical"),
     )
-
-
-def dedup_canonical(
-    df: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
-    src: str = "id_a", dst: str = "id_b",
-) -> DataFrame:
-    """Drop every non-canonical member of every duplicate cluster: keeps
-    docs that are unclustered (no candidate pair — the overwhelming
-    majority, which the left_anti join never shuffles wide) or the
-    cluster minimum. Two shuffles beyond the CC itself: one broadcast-or-
-    hash join against the (tiny) non-canonical id list."""
-    drop = duplicate_clusters(pairs, src, dst).filter(~F.col("is_canonical"))
-    return df.join(
-        drop.select(F.col("id").alias(id_col)), id_col, "left_anti"
-    )

@@ -100,47 +100,3 @@ def pack_assign(
         )
         .withColumn(f"{out_prefix}_pos", F.row_number().over(w))
     )
-
-
-def pack_stats(
-    packed: DataFrame,
-    budget: int,
-    token_col: str = "n_tokens",
-    out_prefix: str = "pack",
-) -> DataFrame:
-    """One row per pack: doc count, token total, fill ratio, overflow.
-    Partial-aggregated on the (bucket, pack) key."""
-    return (
-        packed.groupBy(f"{out_prefix}_bucket", f"{out_prefix}_id")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum(token_col).alias("tokens"),
-        )
-        .withColumn("fill", F.col("tokens") / budget)
-        .withColumn(
-            "overflow",
-            F.greatest(F.col("tokens") - budget, F.lit(0)),
-        )
-    )
-
-
-def packing_efficiency(
-    packed: DataFrame,
-    budget: int,
-    token_col: str = "n_tokens",
-    out_prefix: str = "pack",
-) -> DataFrame:
-    """Single-row rollup: packs, mean fill, token-weighted utilization
-    (tokens / (packs * budget), clipping overflow — what fraction of
-    the training windows' budget carries real tokens)."""
-    s = pack_stats(packed, budget, token_col, out_prefix)
-    return s.agg(
-        F.count("*").alias("n_packs"),
-        F.sum("n_docs").alias("n_docs"),
-        F.round(F.avg("fill"), 4).alias("mean_fill"),
-        F.round(
-            F.sum(F.least(F.col("tokens"), F.lit(budget)))
-            / (F.count("*") * budget),
-            4,
-        ).alias("utilization"),
-    )

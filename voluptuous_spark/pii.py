@@ -103,17 +103,6 @@ def _kind_hits(text_col, k):
     return F.regexp_extract_all(text_col, F.lit(PII_PATTERNS[k]), 0)
 
 
-def pii_hits(text_col, kinds=None):
-    """map<string, array<string>> of matches per PII kind (card entries
-    Luhn-verified). One expression — rides any existing scan."""
-    kinds = list(kinds or PII_PATTERNS)
-    entries = []
-    for k in kinds:
-        hits = _kind_hits(text_col, k)
-        entries.append(F.struct(F.lit(k).alias("key"), hits.alias("value")))
-    return F.map_from_entries(F.array(*entries))
-
-
 def pii_counts(
     df: DataFrame,
     text_col: str = "text",
@@ -135,40 +124,6 @@ def pii_counts(
         c = F.col(f"{k}_count")
         total = c if total is None else total + c
     return out.withColumn("pii_total", total)
-
-
-def pii_violations(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    kinds=None,
-    max_rendered: int = 3,
-) -> DataFrame:
-    """Violation rows in the engine's error surface shape:
-    (id, path, message, error_type) — one row per (document, kind) with
-    at least one hit; offending values are size-capped (never ship a
-    10^4-match array through the report)."""
-    kinds = list(kinds or PII_PATTERNS)
-    branches = []
-    for k in kinds:
-        hits = _kind_hits(F.col(text_col), k)
-        branches.append(
-            df.select(
-                F.col(id_col),
-                F.array(F.lit(text_col)).alias("path"),
-                F.concat(
-                    F.lit(f"PII ({k}): "),
-                    F.size(hits).cast("string"),
-                    F.lit(" match(es), e.g. "),
-                    F.array_join(F.slice(hits, 1, max_rendered), ", "),
-                ).alias("message"),
-                F.lit(f"pii.{k}").alias("error_type"),
-            ).where(F.size(hits) > 0)
-        )
-    out = branches[0]
-    for b in branches[1:]:
-        out = out.unionByName(b)
-    return out
 
 
 def redact_pii(

@@ -18,23 +18,21 @@ the unit interval:
 
 Operators:
 
-- ``split_assign`` / ``hash_split``  weighted train/val/test labels —
-  pure projection, no shuffle, stable under corpus growth.
+- ``split_assign``        weighted train/val/test labels — pure
+  projection, no shuffle, stable under corpus growth (filter on the
+  label for one split; ``checks.drift.category_histogram`` counts them).
 - ``stratified_sample``   per-stratum hash-threshold sampling (exact
   expected fraction, zero shuffles — the scale path).
 - ``stratified_take``     EXACT n rows per stratum via a window over
   the stratum partition — one shuffle on the strata key; a mega-stratum
   flows through one task (documented skew trade; use the fraction form
   at scale).
-- ``split_report``        per-label counts/fractions (partial-agg pass).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from .checks.drift import category_histogram
 
 _SIXTY_BITS = 1 << 60
 
@@ -98,22 +96,6 @@ def split_assign(
     return df.withColumn(out_col, label)
 
 
-def hash_split(
-    df: DataFrame,
-    weights: dict[str, float],
-    id_col: str = "doc_id",
-    salt: str = "",
-    basis: str = "hashed",
-) -> dict[str, DataFrame]:
-    """{label: DataFrame} view of ``split_assign`` — each split is a
-    filter over the same scan (Catalyst pushes it down), no shuffle."""
-    labeled = split_assign(df, weights, id_col, salt, basis)
-    return {
-        name: labeled.where(F.col("split") == name).drop("split")
-        for name in weights
-    }
-
-
 def stratified_sample(
     df: DataFrame,
     strata_col: str,
@@ -174,14 +156,6 @@ def stratified_take(
         df.withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") <= n)
         .drop("__rn")
-    )
-
-
-def split_report(df: DataFrame, split_col: str = "split") -> DataFrame:
-    """(split, n, fraction) — one partial-aggregated pass."""
-    return category_histogram(df, split_col).select(
-        F.col("value").alias(split_col), F.col("count").alias("n"),
-        F.col("ratio").alias("fraction"),
     )
 
 

@@ -1135,7 +1135,16 @@ class Schema:
         (schema_builder.py:138) — so the Columns are built once per
         session. An extra check is keyed by its ``repr``: pass the same
         Column on every call (``pcm_check_expr`` returns one per session),
-        or one that prints the same, for the call to hit the memo."""
+        or one that prints the same, for the call to hit the memo.
+
+        Session confs: ``session.get_spark`` sets
+        ``spark.sql.subexpressionElimination.enabled=false`` and
+        ``spark.sql.optimizer.excludedRules=org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate``;
+        set both on a session built elsewhere. Without them the answers
+        are the same (the 54 strict DuckDB oracles all matched under stock
+        settings), but the plans of ExactSequence and SomeOf element
+        checks hit a Janino compile bug: Spark logs a ``Failed to
+        compile`` ERROR and runs those stages interpreted."""
         if self._value_only:
             raise UnsupportedSchema(
                 "table Schema must be a dict of column -> validator (or "

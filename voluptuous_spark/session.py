@@ -5,6 +5,7 @@ from __future__ import annotations
 import os
 import weakref
 
+from pyspark.errors import PySparkRuntimeError
 from pyspark.sql import SparkSession
 
 
@@ -80,6 +81,12 @@ def get_spark(
       session built elsewhere must set it before its SparkContext starts.
       With Spark's default of 100, each warm ``run_suite`` op recompiles
       about 30 classes.
+
+    When the JVM cannot start (say, a heap size it rejects or cannot
+    reserve), this raises one ``RuntimeError`` that names the heap and
+    off-heap sizes asked for and the ``SPARK_DRIVER_MEMORY`` /
+    ``SPARK_OFFHEAP_MEMORY`` overrides; the JVM's own reason is on
+    stderr.
     """
     master = master or os.environ.get("SPARK_MASTER", None)
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
@@ -174,7 +181,17 @@ def get_spark(
     conf.update(extra_conf or {})
     for k, v in conf.items():
         b = b.config(k, v)
-    return b.getOrCreate()
+    try:
+        return b.getOrCreate()
+    except PySparkRuntimeError as e:
+        if e.getCondition() != "JAVA_GATEWAY_EXITED":
+            raise
+        raise RuntimeError(
+            f"the JVM did not start with driver heap "
+            f"{conf['spark.driver.memory']} and off-heap "
+            f"{conf['spark.memory.offHeap.size']}; set SPARK_DRIVER_MEMORY "
+            "and SPARK_OFFHEAP_MEMORY to sizes this host can hold (e.g. "
+            "4g); the JVM's own message is on stderr") from e
 
 
 _SESSION_MEMO: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()

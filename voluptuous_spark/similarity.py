@@ -1003,55 +1003,6 @@ def pq_query_table(qvec_col, codebooks: list):
     ])
 
 
-def _adc_score(qtab_col, qnorm_col, code_col, rnorm_col, m: int):
-    num = None
-    for j in range(m):
-        term = F.element_at(qtab_col[j], code_col[j] + 1)
-        num = term if num is None else num + term
-    return F.round(num / (qnorm_col * rnorm_col), 6)
-
-
-def pq_topk(
-    codes: DataFrame,
-    queries: DataFrame,
-    codebooks: list,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-) -> DataFrame:
-    """ANN top-k over the COMPRESSED corpus (``pq_encode`` output —
-    the raw vectors are not read). Approximate cosine =
-    sum_j qtab[j][code_j] / (||q|| * rnorm). The query side (with its
-    ADC tables) broadcasts; each candidate costs m lookups + adds; the
-    only exchange is the per-query top-k window. Returns
-    (query_id, vec_id, score, rank) — same shape as the other *_topk."""
-    m = len(codebooks)
-    q = (
-        _as_double(queries, vec_col)
-        .select(
-            query_id_col,
-            pq_query_table(F.col(vec_col), codebooks).alias("__qtab"),
-            _norm(F.col(vec_col)).alias("__qn"),
-        )
-    )
-    cand = codes.crossJoin(F.broadcast(q)).select(
-        query_id_col,
-        id_col,
-        _adc_score(
-            F.col("__qtab"), F.col("__qn"), F.col("code"),
-            F.col("rnorm"), m,
-        ).alias("score"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("score"), F.col(id_col)
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
-
-
 def _cent_lit(centroids):
     """array<array<double>> literal of centroid components, indexed by
     dense cid (``ivf_centroids`` returns dense 0..k-1 cids). ONE

@@ -2,9 +2,10 @@
 
 Beyond the reference's validators, a 100TB training-data pipeline needs
 dedup + text-quality primitives. All are pure DataFrame ops (JVM-side,
-oracle-checkable in ANSI SQL):
+oracle-checkable in ANSI SQL). Exact dedup is the md5 of
+``normalize_text`` grouped by a window; the ``doc_profile`` query in
+``__spark_entry__.py`` computes those columns inline.
 
-- exact dedup          md5 hash groupBy (1 shuffle)
 - ngram Jaccard dedup  shingle explode -> self-join on shingle -> pairwise
                        intersection counts (LSH-free exact variant for
                        moderate corpora; MinHash+LSH below for scale)
@@ -17,7 +18,7 @@ oracle-checkable in ANSI SQL):
                        signals (dup token/bigram ratio, top-token
                        multiplicity) in the same pass
 - token count          regex word split
-- fingerprint          md5 of normalized text
+- boilerplate removal  per-source line document frequency on line hashes
 
 Hash basis (MinHash/SimHash): production default is ``basis='hashed'`` —
 xxhash64 on the shingle/token, no dictionary, zero extra shuffles. The
@@ -44,51 +45,6 @@ _MINHASH_COEFS = [
 
 def normalize_text(col):
     return F.lower(F.trim(F.regexp_replace(col, r"\s+", " ")))
-
-
-def doc_fingerprint(df: DataFrame, text_col: str = "text",
-                    id_col: str = "doc_id") -> DataFrame:
-    """(id, fingerprint) — md5 of normalized text; portable + exact."""
-    return df.select(
-        F.col(id_col),
-        F.md5(normalize_text(F.col(text_col))).alias("fingerprint"),
-    )
-
-
-def exact_duplicates(df: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id", max_sample_ids: int = 32,
-                     ) -> DataFrame:
-    """Exact dedup via hash groupBy: one shuffle on the md5 fingerprint
-    (never on raw text — the shuffle key is 32 bytes regardless of doc
-    size). Returns (fingerprint, dup_count, canonical_id,
-    sample_ids) for groups with dup_count > 1; canonical_id = min id
-    (the member a dedup pass keeps), sample_ids = the first
-    ``max_sample_ids`` ids in id order.
-
-    Skew shape: NO unbounded collect_list — a boilerplate document
-    duplicated 10^6 times must not put a 10^6-element array in one
-    aggregation buffer (the skew graph.py's docstring warns against).
-    The per-group id order comes from a window row_number on the same
-    key as the groupBy (one shuffle, partitioning reused — no second
-    exchange); the window sorts via spill-safe external sort, and the
-    aggregate buffers at most ``max_sample_ids`` ids because ids past
-    the cap are nulled BEFORE collect_list (which skips nulls)."""
-    w = Window.partitionBy("fingerprint").orderBy(id_col)
-    return (
-        doc_fingerprint(df, text_col, id_col)
-        .withColumn("__rn", F.row_number().over(w))
-        .groupBy("fingerprint")
-        .agg(
-            F.count(F.lit(1)).alias("dup_count"),
-            F.min(id_col).alias("canonical_id"),
-            F.sort_array(
-                F.collect_list(
-                    F.when(F.col("__rn") <= max_sample_ids, F.col(id_col))
-                )
-            ).alias("sample_ids"),
-        )
-        .filter(F.col("dup_count") > 1)
-    )
 
 
 def _shingles(df: DataFrame, text_col: str, id_col: str, n: int,
@@ -638,39 +594,12 @@ def _exploded_lines(df, text_col, id_col, source_col, with_pos=False):
     )
 
 
-def line_doc_frequency(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str | None = "source",
-) -> DataFrame:
-    """(source?, line, df_docs) — how many distinct documents of a
-    source contain each (trimmed) line; blank lines are ignored.
-
-    Shuffle keys are ``xxhash64(line)`` (8 bytes), never the line
-    string: the distinct-doc count groups on (source, line_hash) and
-    the string survives only as a ``min(line)`` exemplar, which the
-    map-side partial agg collapses to one copy per distinct line per
-    partition before the exchange. A collision (~k²/2^65 at k distinct
-    lines) merges two lines' counts — the same accepted trade as every
-    other hashed-key op in this module."""
-    return _line_hash_frequency(
-        df, text_col, id_col, source_col, exemplar=True
-    ).select(*([source_col] if source_col else []), "line", "df_docs")
-
-
-def _line_hash_frequency(
-    df, text_col, id_col, source_col, exemplar=False
-) -> DataFrame:
-    """(source?, __lh, df_docs[, line]) — distinct-doc count per hashed
-    line; ``exemplar`` additionally carries min(line) (partial-agg
-    collapses it map-side)."""
+def _line_hash_frequency(df, text_col, id_col, source_col) -> DataFrame:
+    """(source?, __lh, df_docs) — distinct-doc count per hashed line."""
     keys = ([F.col(source_col)] if source_col else []) + [F.col("__lh")]
     lines = _exploded_lines(df, text_col, id_col, source_col)
-    aggs = [F.count_distinct(F.col(id_col)).alias("df_docs")]
-    if exemplar:
-        aggs.append(F.min("line").alias("line"))
-    return lines.groupBy(*keys).agg(*aggs)
+    return lines.groupBy(*keys).agg(
+        F.count_distinct(F.col(id_col)).alias("df_docs"))
 
 
 def remove_boilerplate(
@@ -751,97 +680,3 @@ def remove_boilerplate(
         )
         .drop("__clean")
     )
-
-
-# ---------------------------------------------------------------------------
-# URL / domain curation: crawl corpora are filtered by where text came
-# from or what it links to — blocklisted domains, per-domain volume
-# caps (one mega-site must not dominate a training mix).
-# ---------------------------------------------------------------------------
-
-_URL_RE = r"https?://[A-Za-z0-9._~:/?#\[\]@!$&'()*+,;=%-]+"
-_HOST_RE = r"https?://([A-Za-z0-9.-]+)"
-
-
-def extract_urls(text_col):
-    """array<string> of http(s) URLs — RE2-class pattern, identical in
-    DuckDB."""
-    return F.regexp_extract_all(
-        F.coalesce(text_col, F.lit("")), F.lit(_URL_RE), 0
-    )
-
-
-def doc_domains(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """(id, domain) — one row per DISTINCT lowercased host mentioned in
-    the document. Zero joins; explode fan-out bounded by URL count."""
-    hosts = F.transform(
-        extract_urls(F.col(text_col)),
-        lambda u: F.lower(F.regexp_extract(u, _HOST_RE, 1)),
-    )
-    return (
-        df.select(F.col(id_col), F.explode(F.array_distinct(hosts))
-                  .alias("domain"))
-        .where(F.col("domain") != "")
-    )
-
-
-def _domain_matches(domain_col, blocked):
-    """Exact or subdomain match against a literal blocklist (the list
-    is policy-sized — hundreds to low thousands — so it compiles to a
-    broadcast-literal expression, no join)."""
-    cond = None
-    for b in blocked:
-        b = b.lower()
-        m = (domain_col == b) | domain_col.endswith("." + b)
-        cond = m if cond is None else cond | m
-    return cond if cond is not None else F.lit(False)
-
-
-def flag_blocklisted(
-    df: DataFrame,
-    blocklist,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Input plus ``blocked_domain`` (first blocklisted host mentioned,
-    NULL = clean). Subdomains of a blocked domain are blocked
-    (ads.evil.com under evil.com). Pure projection — rides the scan."""
-    blocked = [b.lower() for b in blocklist]
-    hosts = F.transform(
-        extract_urls(F.col(text_col)),
-        lambda u: F.lower(F.regexp_extract(u, _HOST_RE, 1)),
-    )
-    # F.get is the ANSI-safe index: empty array -> NULL, not an error
-    first = F.get(F.filter(hosts, lambda d: _domain_matches(d, blocked)), 0)
-    return df.withColumn("blocked_domain", first)
-
-
-def drop_blocklisted(
-    df: DataFrame,
-    blocklist,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Documents mentioning no blocklisted domain — shuffle-free filter."""
-    return (
-        flag_blocklisted(df, blocklist, text_col, id_col)
-        .where(F.col("blocked_domain").isNull())
-        .drop("blocked_domain")
-    )
-
-
-def cap_per_domain(
-    df: DataFrame,
-    n: int,
-    domain_col: str = "source",
-    id_col: str = "doc_id",
-    salt: str = "",
-) -> DataFrame:
-    """At most ``n`` documents per domain/source — the anti-dominance
-    cap a training mix applies to mega-sites. Deterministic and nested
-    (same guarantees as ``sampling.stratified_take``, which this is)."""
-    from .sampling import stratified_take
-
-    return stratified_take(df, domain_col, n, id_col=id_col, salt=salt)
