@@ -240,7 +240,7 @@ _BOILERPLATE_ORACLE = r"""
     ), src AS (
       SELECT source, COUNT(*) AS src_docs FROM pages GROUP BY 1
     ), flagged AS (
-      SELECT l.*, (d.df_docs >= s.src_docs * 0.5) AS bp
+      SELECT l.*, (d.df_docs >= s.src_docs * 0.5 AND d.df_docs >= 2) AS bp
       FROM lines l
       JOIN dfreq d USING (source, line)
       JOIN src s USING (source)

@@ -83,3 +83,38 @@ def test_checkpoint_read_failure_is_not_an_empty_checkpoint(spark):
         os.remove(os.path.join(path, "part-corrupt.parquet"))
         assert cv.report().count() == n_rows  # nothing appended twice
         assert len(cv.completed_buckets()) == 4
+
+
+def test_wall_ms_covers_the_step_and_labels_its_jobs(spark):
+    """``wall_ms`` is stamped after the step's work has run: a filter
+    through a sleeping Python UDF (which column pruning cannot drop) must
+    show up in it. The step's jobs run under ``checkpoint:<phase>``
+    descriptions, and the caller's description is restored after."""
+    import time
+
+    nap_s, n = 0.3, 4
+
+    def slow(_):
+        time.sleep(nap_s)
+        return True
+
+    slow_udf = F.udf(slow, "boolean")
+
+    def fn(d):
+        # one partition, so the naps run one after another
+        return _fn(d.coalesce(1).filter(slow_udf("clip_id")))
+
+    clips = clips_df(spark, n, seed=3, partitions=1)
+    sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    try:
+        with tempfile.TemporaryDirectory() as tmp:
+            cv = CheckpointedValidation(spark, f"{tmp}/ckpt", n_buckets=2)
+            assert cv.run(clips, fn, buckets_per_step=2) == 1
+            assert sc.getLocalProperty("spark.job.description") == "caller"
+            rows = cv.report().collect()
+    finally:
+        sc.setJobDescription(None)
+    assert sorted(r["bucket"] for r in rows) == [0, 1]
+    assert sum(r["n_rows"] for r in rows) == n
+    assert all(r["wall_ms"] >= nap_s * n * 1000 for r in rows)

@@ -70,6 +70,22 @@ def test_remove_boilerplate_min_frac(pages):
     assert out[0] == f"unique zero\n{NAV}"
 
 
+def test_remove_boilerplate_min_frac_keeps_small_sources(spark):
+    """A line seen in one document does not repeat: a one-document
+    source keeps its text under ``min_frac``, while a three-document
+    source still loses its banner."""
+    rows = [(0, "tiny", "TINY BANNER\nlonely line")] + [
+        (k, "big", f"BIG BANNER\nunique {k}") for k in (1, 2, 3)
+    ]
+    pages = spark.createDataFrame(
+        rows, "doc_id long, source string, text string")
+    out = {r["doc_id"]: (r["text"], r["lines_removed"]) for r in
+           remove_boilerplate(pages, min_frac=0.5).collect()}
+    assert out[0] == ("TINY BANNER\nlonely line", 0)
+    assert {k: out[k] for k in (1, 2, 3)} == {
+        k: (f"unique {k}", 1) for k in (1, 2, 3)}
+
+
 def test_remove_boilerplate_duckdb_oracle(pages):
     """The whole pipeline replays in SQL: per-source line DF, flag,
     filter, ordered string_agg."""

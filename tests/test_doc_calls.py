@@ -5,7 +5,8 @@ over the same document as a one-row DataFrame."""
 import pytest
 
 from voluptuous_spark import (
-    Any, Coerce, Exclusive, In, Inclusive, Optional, Required, Schema,
+    Any, Coerce, DefaultTo, Exclusive, In, Inclusive, Lower, Maybe,
+    Optional, Required, Schema, SetTo,
 )
 from voluptuous_spark.exceptions import MultipleInvalid
 from voluptuous_spark.schema import _to_row_value
@@ -100,3 +101,22 @@ def test_call_errors_match_validate_rendering(spark, schema, doc):
     want = [r["rendered"] for r in
             schema.validate(df).violations.select("rendered").collect()]
     assert len(got) > 1 and got == want
+
+
+# a root None takes the verdict a None dict value takes: Any tries its
+# branches in order, so the transforming branch wins over the None one
+ROOT_NONE = {
+    "any_default_to": (Any(DefaultTo(5), None), 5),
+    "any_lower": (Any(Lower, None), "none"),
+    "any_set_to": (Any(SetTo(7), None), 7),
+    "maybe": (Maybe(int), None),
+    "default_to": (DefaultTo(3), 3),
+    "set_to": (SetTo(4), 4),
+}
+
+
+@pytest.mark.parametrize("name", ROOT_NONE)
+def test_root_none_matches_dict_value_none(spark, name):
+    node, want = ROOT_NONE[name]
+    assert Schema({"k": node})({"k": None}) == {"k": want}
+    assert Schema(node)(None) == want

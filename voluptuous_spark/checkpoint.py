@@ -184,56 +184,56 @@ class CheckpointedValidation:
             )
         bdf = self._bucketed_input(df, staging_path)
         pending = self.pending_buckets()
+        # each action runs under the job description checkpoint:<phase>;
+        # the caller's description is restored after
+        sc = self.spark.sparkContext
+        prev_desc = sc.getLocalProperty("spark.job.description")
         steps = 0
-        for start in range(0, len(pending), buckets_per_step):
-            if max_steps is not None and steps >= max_steps:
-                break
-            chunk = pending[start : start + buckets_per_step]
-            t0 = time.time()
-            subset = bdf.filter(F.col("__bucket").isin(chunk))
-            if stats_cols is not None:
-                self._append_stats(subset, stats_cols, stats_path, run_id)
-            annotated = validate_fn(subset.drop("__bucket")).withColumn(
-                "__bucket", self._bucket()
-            )
-            ok = (F.size("__errors") == 0).cast("long")
-            summary = annotated.groupBy("__bucket").agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum(ok).alias("passed"),
-                F.sum(1 - ok).alias("failed"),
-                F.sum(F.size("__errors")).alias("violation_count"),
-                F.sum(self._fp()).alias("input_fingerprint"),
-            )
-            wall_ms = int((time.time() - t0) * 1000)
-            out = summary.select(
-                F.col("__bucket").alias("bucket"),
-                "n_rows",
-                "passed",
-                "failed",
-                "violation_count",
-                "input_fingerprint",
-                F.lit(wall_ms).alias("wall_ms"),
-                F.lit(time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())).alias(
-                    "completed_at"
-                ),
-                F.lit(run_id).alias("run_id"),
-            )
-            # cover buckets with zero rows so they count as completed
-            empty = [b for b in chunk]
-            base = self.spark.createDataFrame(
-                [(b,) for b in empty], "bucket int"
-            )
-            out = base.join(out, "bucket", "left").fillna(
-                0,
-                subset=[
-                    "n_rows", "passed", "failed", "violation_count",
-                    "input_fingerprint",
-                ],
-            ).fillna(
-                {"wall_ms": wall_ms, "completed_at": "", "run_id": run_id}
-            )
-            out.write.mode("append").parquet(self.path)
-            steps += 1
+        try:
+            for start in range(0, len(pending), buckets_per_step):
+                if max_steps is not None and steps >= max_steps:
+                    break
+                chunk = pending[start : start + buckets_per_step]
+                t0 = time.time()
+                subset = bdf.filter(F.col("__bucket").isin(chunk))
+                if stats_cols is not None:
+                    sc.setJobDescription("checkpoint:stats")
+                    self._append_stats(subset, stats_cols, stats_path,
+                                       run_id)
+                annotated = validate_fn(subset.drop("__bucket")).withColumn(
+                    "__bucket", self._bucket()
+                )
+                ok = (F.size("__errors") == 0).cast("long")
+                sc.setJobDescription("checkpoint:validate")
+                summary = {
+                    r[0]: tuple(r[1:])
+                    for r in annotated.groupBy("__bucket").agg(
+                        F.count(F.lit(1)),
+                        F.sum(ok),
+                        F.sum(1 - ok),
+                        F.sum(F.size("__errors")),
+                        F.sum(self._fp()),
+                    ).collect()
+                }
+                # stamped after the collect: wall_ms covers the sketch
+                # append and the validation pass
+                wall_ms = int((time.time() - t0) * 1000)
+                completed_at = time.strftime("%Y-%m-%dT%H:%M:%SZ",
+                                             time.gmtime())
+                # buckets with zero rows get a row too, so they count as
+                # completed; at most buckets_per_step rows, written from
+                # the driver
+                rows = [
+                    (b, *summary.get(b, (0, 0, 0, 0, 0)), wall_ms,
+                     completed_at, run_id)
+                    for b in chunk
+                ]
+                sc.setJobDescription("checkpoint:write")
+                self.spark.createDataFrame(rows, CHECKPOINT_DDL).write.mode(
+                    "append").parquet(self.path)
+                steps += 1
+        finally:
+            sc.setJobDescription(prev_desc)
         return steps
 
     def _append_stats(

@@ -33,7 +33,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .errors import err_struct
+from .errors import VIOLATION_SCHEMA, err_struct, py_repr_col, truncate_repr
 
 # populated by schema.py at import time (avoids a circular import):
 # Schema instances used as value validators unwrap to their inner schema
@@ -55,7 +55,7 @@ class RowCheck:
 
     __slots__ = ("out", "err", "out_type", "drop_path", "multi",
                  "err_arr", "out_arr", "pystr_out", "err_pystr",
-                 "identity_out", "static_fail")
+                 "identity_out", "static_fail", "elem_viols")
 
     _ERR_T = "struct<message:string,error_type:string>"
     _MULTI_T = "array<struct<message:string,error_type:string>>"
@@ -84,8 +84,8 @@ class RowCheck:
         # structs / array of outs): set ONLY when the check (or a nested
         # stage) is a Python UDF, which Spark cannot reference inside a
         # higher-order-function lambda (UNSUPPORTED_FEATURE.
-        # LAMBDA_FUNCTION_WITH_PYTHON_UDF). Sequence compilers detect this
-        # and pre-compute per-alternative arrays OUTSIDE the lambdas.
+        # LAMBDA_FUNCTION_WITH_PYTHON_UDF); ``_elem_verdicts`` zips its
+        # arrays with the elements OUTSIDE the lambdas.
         self.err_arr = None
         self.out_arr = None
         # per-row Python-str threading (reference parity): a transform
@@ -106,6 +106,9 @@ class RowCheck:
         # type): combinators exclude such branches from output-type
         # unification — they can never be the passing branch
         self.static_fail = False
+        # sequence checks only: Column over a list cell -> array of
+        # violation structs with paths relative to the list
+        self.elem_viols = None
 
     @staticmethod
     def passing(out_type=None):
@@ -399,10 +402,96 @@ def _type_check(pytype, dtype) -> RowCheck:
     return rc
 
 
+def _elem_verdicts(col, checks, outs=()):
+    """The one input of every element-wise rule (list, set, Unordered).
+    Returns ``(z, err, out)``: ``z`` holds one struct per element with
+    its index ``i``, the element ``v`` and, for every check that runs
+    Python (``err_arr`` set), that check's Arrow-lifted err ``e<k>`` (and
+    output ``o<k>`` for ``k`` in ``outs``). The lifted arrays are zipped
+    with the elements OUTSIDE any lambda: Spark rejects a Python UDF
+    inside a higher-order lambda (UNSUPPORTED_FEATURE.
+    LAMBDA_FUNCTION_WITH_PYTHON_UDF) but takes UDF results as its
+    arguments. ``err(s, k)`` / ``out(s, k)`` give check ``k``'s err /
+    output for an element ``s`` inside a consumer's pure lambda: the
+    lifted field, or the pure check evaluated on the element in place.
+
+    Higher-order functions run interpreted and ``arrays_zip`` costs a
+    pass of its own, so pure checks get no array of their own and the
+    zip is built only when there is a lifted array to zip."""
+    lifted = [k for k, ch in enumerate(checks) if ch.err_arr is not None]
+    fields = ([f"e{k}" for k in lifted]
+              + [f"o{k}" for k in outs if k in lifted])
+    if lifted:
+        col = F.arrays_zip(
+            col.alias("v"),
+            *[checks[k].err_arr(col).alias(f"e{k}") for k in lifted],
+            *[checks[k].out_arr(col).alias(f"o{k}") for k in outs
+              if k in lifted],
+        )
+    z = F.transform(col, lambda x, i: F.struct(
+        i.alias("i"),
+        (x["v"] if lifted else x).alias("v"),
+        *[x[f].alias(f) for f in fields],
+    ))
+
+    def err(s, k):
+        return s[f"e{k}"] if k in lifted else checks[k].err(s["v"])
+
+    def out(s, k):
+        return s[f"o{k}"] if k in lifted else checks[k].out(s["v"])
+
+    return z, err, out
+
+
+def _first_match(err, s, ks, then, otherwise):
+    """CASE over the checks ``ks`` in declaration order: ``then(k)`` for
+    the first check that passes element ``s``, else ``otherwise``."""
+    expr = otherwise
+    for k in reversed(ks):
+        expr = F.when(err(s, k).isNull(), then(k)).otherwise(expr)
+    return expr
+
+
+def _no_match(err, s, ks):
+    """Element ``s`` passes none of the checks ``ks``."""
+    ok = F.lit(False)
+    for k in ks:
+        ok = ok | err(s, k).isNull()
+    return ~F.coalesce(ok, F.lit(False))
+
+
+_VIOL_ARR_T = T.ArrayType(VIOLATION_SCHEMA)
+
+
+def prefix_paths(viols, head):
+    """``viols`` (array of violation structs) with every path prefixed
+    by the string Columns ``head``."""
+    if not head:
+        return viols
+    return F.transform(viols, lambda e: F.struct(
+        F.concat(F.array(*head), e["path"]).alias("path"),
+        *[e[f].alias(f) for f in VIOLATION_SCHEMA.fieldNames()[1:]],
+    ))
+
+
 def _sequence_check(alternatives, dtype) -> RowCheck:
-    """Schema([alt1, alt2]) over an ArrayType column: every element must
-    match >=1 alternative, in declaration order (schema_builder.py:578-663).
-    Elements matching a Remove alternative are dropped from the output.
+    """Schema([alt1, alt2]) over an ArrayType column (reference
+    ``_compile_sequence``, schema_builder.py:578-632): each element is
+    tried against the alternatives IN DECLARATION ORDER; the first match
+    decides — a keep alternative keeps (and transforms) the element, a
+    Remove alternative drops it. An element claimed by an earlier keep
+    alternative is kept even if a later Remove also matches
+    ([1.0, Remove(float)] keeps the 1.0s, tests.py:215-223).
+
+    Besides ``out`` / ``err`` the check carries ``elem_viols``: the
+    violations of one list cell, paths relative to the list. A failing
+    element gives one violation at ``[i]`` with the LAST keep
+    alternative's error (the reference overwrites ``invalid`` per failed
+    alternative and keeps the final one). Over nested lists the
+    reference re-raises any error DEEPER than the element index
+    (schema_builder.py:616-620): the first element whose inner list fails
+    aborts with its inner errors (``[i, j, ...]``), and shallow errors of
+    earlier elements are dropped.
     """
     if not isinstance(dtype, T.ArrayType):
         rc = _pred_check(
@@ -411,23 +500,18 @@ def _sequence_check(alternatives, dtype) -> RowCheck:
         rc.static_fail = True
         return rc
     elem_t = dtype.elementType
-    # alternatives are tried IN DECLARATION ORDER per element
-    # (schema_builder.py:605-625): an element claimed by an earlier keep
-    # alternative is kept even if a later Remove alternative also matches
-    # ([1.0, Remove(float)] keeps the 1.0s, tests.py:215-223)
     checks = [
-        (compile_validator(a.schema if isinstance(a, Remove) else a, elem_t),
-         isinstance(a, Remove))
+        compile_validator(a.schema if isinstance(a, Remove) else a, elem_t)
         for a in alternatives
     ]
-    keep_checks = [ch for ch, rm in checks if not rm]
-    udf_mode = any(ch.err_arr is not None for ch, _ in checks)
+    every = range(len(checks))
+    keep_idx = [k for k in every if not isinstance(alternatives[k], Remove)]
     # output element type: transforming alternatives (Boolean, Coerce,
     # Lower, ...) replace matched elements with their output — one array
     # column must hold them all, so the keep alternatives' out types must
     # agree (the reference would build a mixed-type Python list, which has
     # no ArrayType carrier)
-    out_elem_ts = [ch.out_type or elem_t for ch in keep_checks]
+    out_elem_ts = [checks[k].out_type or elem_t for k in keep_idx]
     if len({t.simpleString() for t in out_elem_ts}) > 1:
         raise UnsupportedSchema(
             "sequence alternatives transform elements to different types "
@@ -437,96 +521,97 @@ def _sequence_check(alternatives, dtype) -> RowCheck:
     out_elem_t = out_elem_ts[0] if out_elem_ts else elem_t
     transforms = out_elem_t.simpleString() != elem_t.simpleString()
     out_arr_t = T.ArrayType(out_elem_t, True) if transforms else dtype
-    # non-matching elements are filtered out before the output transform,
-    # so the no-match fallback is dead — but it must still TYPE-unify
-    # with the alternatives' outputs
-    _fallback = (lambda x: F.lit(None).cast(out_elem_t)) if transforms \
-        else (lambda x: x)
-
-    if udf_mode:
-        # a UDF-backed alternative cannot be referenced inside a
-        # higher-order lambda BODY, but UDF-result arrays are legal as
-        # higher-order-function ARGUMENTS: zip the per-alternative err/out
-        # arrays with the values, then filter/transform with PURE lambdas
-        # over the zipped struct fields
-        keep_idx = [k for k, (_, rm) in enumerate(checks) if not rm]
-
-        def _zipped(col, with_outs):
-            cols = [col.alias("v")]
-            cols += [_err_arr_of(ch)(col).alias(f"e{k}")
-                     for k, (ch, _) in enumerate(checks)]
-            if with_outs:
-                cols += [_out_arr_of(ch)(col).alias(f"o{j}")
-                         for j, ch in enumerate(keep_checks)]
-            return F.arrays_zip(*cols)
-
-        def out(col):
-            z = _zipped(col, with_outs=True)
-
-            def keep_s(s):
-                expr = F.lit(False)
-                for k, (_, rm) in reversed(list(enumerate(checks))):
-                    expr = F.when(
-                        s[f"e{k}"].isNull(), F.lit(not rm)
-                    ).otherwise(expr)
-                return expr
-
-            def out_s(s):
-                expr = _fallback(s["v"])
-                for j, k in reversed(list(enumerate(keep_idx))):
-                    expr = F.when(
-                        s[f"e{k}"].isNull(), s[f"o{j}"]
-                    ).otherwise(expr)
-                return expr
-
-            return F.transform(F.filter(z, keep_s), out_s)
-
-        def err(col):
-            z = _zipped(col, with_outs=False)
-
-            def bad_s(s):
-                ok = F.lit(False)
-                for k in range(len(checks)):
-                    ok = ok | s[f"e{k}"].isNull()
-                return ~F.coalesce(ok, F.lit(False))
-
-            bad = F.exists(z, bad_s)
-            return F.when(
-                col.isNull() | ~bad, F.lit(None)
-            ).otherwise(err_struct("not a valid value", "ValueInvalid"))
-
-        return RowCheck(out, err, out_arr_t)
-
-    def elem_ok(x):
-        ok = F.lit(False)
-        for ch, _ in checks:
-            ok = ok | ch.err(x).isNull()
-        return ok
-
-    def elem_keep(x):
-        # first matching alternative decides: keep unless it is a Remove
-        expr = F.lit(False)  # matched nothing -> invalid, drop from out
-        for ch, rm in reversed(checks):
-            expr = F.when(ch.err(x).isNull(), F.lit(not rm)).otherwise(expr)
-        return expr
-
-    def elem_out(x):
-        # first matching keep alternative's transform wins
-        expr = _fallback(x)
-        for ch in reversed(keep_checks):
-            expr = F.when(ch.err(x).isNull(), ch.out(x)).otherwise(expr)
-        return expr
 
     def out(col):
-        return F.transform(F.filter(col, elem_keep), elem_out)
+        z, e, o = _elem_verdicts(col, checks, outs=keep_idx)
+        # non-matching elements are filtered out before the transform, so
+        # the no-match fallback is dead — but it must still TYPE-unify
+        # with the alternatives' outputs
+        return F.transform(
+            F.filter(z, lambda s: _first_match(
+                e, s, every, lambda k: F.lit(k in keep_idx), F.lit(False))),
+            lambda s: _first_match(
+                e, s, keep_idx, lambda k: o(s, k),
+                F.lit(None).cast(out_elem_t) if transforms else s["v"]),
+        )
 
     def err(col):
-        bad = F.exists(col, lambda x: ~F.coalesce(elem_ok(x), F.lit(False)))
+        z, e, _ = _elem_verdicts(col, checks)
+        bad = F.exists(z, lambda s: _no_match(e, s, every))
         return F.when(
             col.isNull() | ~bad, F.lit(None)
         ).otherwise(err_struct("not a valid value", "ValueInvalid"))
 
-    return RowCheck(out, err, out_arr_t)
+    rc = RowCheck(out, err, out_arr_t)
+    if (isinstance(elem_t, T.ArrayType) and len(keep_idx) == len(checks)
+            and _viable_all_lists(alternatives, elem_t)):
+        # only the FIRST list alternative is reachable for a non-null
+        # element: its inner failure aborts before later ones are tried
+        inner = checks[next(
+            k for k in keep_idx if isinstance(alternatives[k], list))]
+        rc.elem_viols = lambda col: _nested_viols(col, inner.elem_viols)
+    else:
+        def elem_viols(col):
+            z, e, _ = _elem_verdicts(col, checks)
+
+            def viol(s):
+                last = (e(s, keep_idx[-1]) if keep_idx
+                        else err_struct("not a valid value", "ValueInvalid"))
+                return F.when(_no_match(e, s, every), F.struct(
+                    F.array(s["i"].cast("string")).alias("path"),
+                    last["message"].alias("message"),
+                    last["error_type"].alias("error_type"),
+                    truncate_repr(py_repr_col(s["v"], elem_t))
+                    .alias("offending"),
+                    F.lit(None).cast("string").alias("ctx"),
+                ))
+
+            return F.filter(F.transform(z, viol),
+                            lambda v: v.isNotNull()).cast(_VIOL_ARR_T)
+
+        rc.elem_viols = elem_viols
+    return rc
+
+
+def _nested_viols(col, inner_viols):
+    """Violations of a list of lists under the reference's abort rule:
+    the first element with inner errors yields only those (paths
+    ``[i, j, ...]``); otherwise each NULL element is 'expected a list' at
+    ``[i]``."""
+    def per(x, i):
+        at = i.cast("string")
+        deep = F.when(x.isNotNull(), prefix_paths(inner_viols(x), [at]))
+        shallow = F.when(x.isNull(), F.struct(
+            F.array(at).alias("path"),
+            F.lit("expected a list").alias("message"),
+            F.lit("SequenceTypeInvalid").alias("error_type"),
+            F.lit("None").alias("offending"),
+            F.lit(None).cast("string").alias("ctx"),
+        ))
+        return F.struct(deep.alias("deep"), shallow.alias("shallow"))
+
+    z = F.transform(col, per)
+    deeps = F.filter(F.transform(z, lambda s: s["deep"]),
+                     lambda a: F.coalesce(F.size(a) > 0, F.lit(False)))
+    shallows = F.filter(F.transform(z, lambda s: s["shallow"]),
+                        lambda v: v.isNotNull())
+    return F.when(F.size(deeps) > 0, F.element_at(deeps, 1)).otherwise(
+        shallows).cast(_VIOL_ARR_T)
+
+
+def _viable_all_lists(alternatives, elem_t) -> bool:
+    """Over an array<array<...>> column, scalar-literal alternatives can
+    never match an ARRAY element (Python cross-type equality is False) —
+    so ``Schema([[2, 3], 6])`` takes the nested-list rule exactly like
+    ``Schema([[2, 3]])``: the list alternative alone decides, its deep
+    inner errors abort (README.md 'matching is depth-first and
+    fail-fast': 'not a valid value @ data[0][0]')."""
+    viable = [
+        a for a in alternatives
+        if isinstance(a, (list, Validator, type)) or callable(a)
+        or _lit_comparable(a, elem_t)
+    ]
+    return bool(viable) and all(isinstance(a, list) for a in viable)
 
 
 def _set_check(schema, dtype) -> RowCheck:
@@ -544,17 +629,12 @@ def _set_check(schema, dtype) -> RowCheck:
         )
         rc.static_fail = True
         return rc
-    elem_t = dtype.elementType
-    alt_checks = [compile_validator(s, elem_t) for s in schema]
-
-    def elem_ok(x):
-        ok = F.lit(False)
-        for ch in alt_checks:
-            ok = ok | ch.err(x).isNull()
-        return ok
+    checks = [compile_validator(s, dtype.elementType) for s in schema]
+    every = range(len(checks))
 
     def err(col):
-        bad = F.exists(col, lambda x: ~F.coalesce(elem_ok(x), F.lit(False)))
+        z, e, _ = _elem_verdicts(col, checks)
+        bad = F.exists(z, lambda s: _no_match(e, s, every))
         return F.when(col.isNull() | ~bad, F.lit(None)).otherwise(
             err_struct(f"invalid value in {type_name}", "Invalid")
         )
@@ -2490,23 +2570,23 @@ class Unordered(Validator):
             the reference accumulates one Invalid per unmatched element
             into a MultipleInvalid (validators.py:1089-1108)."""
             len_ok = F.size(col) == F.lit(n)
+            z, e, _ = _elem_verdicts(col, checks)
 
-            def step(st, i):
-                """One greedy step (validators.py:1072-1088): element i
-                consumes the FIRST not-yet-consumed validator it
+            def step(st, s):
+                """One greedy step (validators.py:1072-1088): element
+                ``s`` consumes the FIRST not-yet-consumed validator it
                 satisfies (``mask`` bit set); an element satisfying none
                 is 'missing' and appends its message. Scalar mask +
                 array-of-strings state on purpose: struct-typed values in
                 nested CASE chains trip a Janino codegen bug ("isNull_N
                 is not an rvalue"); err structs are built at the top."""
-                x = F.try_element_at(col, (i + 1).cast("int"))
                 mask = st["mask"]
                 matched = F.lit(False)
                 mask_expr = None
                 for j in range(n):
                     ok = (
                         (mask.bitwiseAND(F.lit(1 << j)) == 0)
-                        & checks[j].err(x).isNull()
+                        & e(s, j).isNull()
                     )
                     upd = mask.bitwiseOR(F.lit(1 << j))
                     mask_expr = (F.when(ok, upd) if mask_expr is None
@@ -2518,8 +2598,8 @@ class Unordered(Validator):
                 # validator' (validators.py:1090-1100); str(value) form
                 fail_msg = F.lit(self.msg) if self.msg else F.format_string(
                     "Element #%s (%s) is not valid against any validator",
-                    i.cast("string"),
-                    F.coalesce(x.cast("string"), F.lit("None")),
+                    s["i"].cast("string"),
+                    F.coalesce(s["v"].cast("string"), F.lit("None")),
                 )
                 return F.struct(
                     mask_expr.cast("long").alias("mask"),
@@ -2529,7 +2609,7 @@ class Unordered(Validator):
                 )
 
             folded = F.aggregate(
-                F.sequence(F.lit(0), F.size(col) - 1),
+                z,
                 F.struct(
                     F.lit(0).cast("long").alias("mask"),
                     F.array().cast("array<string>").alias("msgs"),
@@ -2547,9 +2627,6 @@ class Unordered(Validator):
                         F.size(col).cast("string"),
                     )),
                 )
-                # n == 0 with an empty array: valid; also keeps the fold
-                # off sequence(0, -1), which Spark generates DESCENDING
-                .when(F.size(col) == 0, F.array().cast("array<string>"))
                 .otherwise(folded["msgs"])
             )
 

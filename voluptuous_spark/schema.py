@@ -47,6 +47,7 @@ from .dsl import (
     Required,
     RowCheck,
     UnsupportedSchema,
+    _VIOL_ARR_T,
     compile_validator,
 )
 from .errors import humanize as _humanize
@@ -483,20 +484,6 @@ class Schema:
             raise er.MultipleInvalid(
                 [er.DictInvalid("expected a dictionary")]
             )
-        if data is None and _accepts_none(self.schema):
-            # root-level None against a None-admitting schema
-            # (Maybe(int)(None) -> None, validators.py:622-635) — short-
-            # circuit driver-side: a NULL carrier cell would read as an
-            # absent key
-            return None
-        if data is None and isinstance(self.schema, dsl.DefaultTo):
-            # DefaultTo(42)(None) -> 42; callable defaults are factories
-            # (util.py:65-86, DefaultTo(list) -> [])
-            d = self.schema.default_value
-            return d() if callable(d) else d
-        if data is None and isinstance(self.schema, dsl.SetTo):
-            v = self.schema.value
-            return v() if callable(v) else v
         if (
             isinstance(self.schema, dsl.Coerce)
             and isinstance(self.schema.type, type)
@@ -2433,18 +2420,14 @@ class Schema:
     def _validate_sequence(self, alternatives: list, col: Column,
                            dtype: T.ArrayType, prefix: tuple[str, ...]):
         """Element-level sequence validation (reference _compile_sequence,
-        schema_builder.py:578-631): each element must match >=1
-        alternative in order; elements matching a Remove alternative are
-        dropped; a failing element contributes ONE violation at
-        ``path + [index]`` carrying the LAST alternative's error (the
-        reference overwrites ``invalid`` per failed alternative and keeps
-        the final one) with no mapping ctx (depth > key depth, so
-        ``error_type`` is never set to 'dictionary value' —
-        schema_builder.py:369-371).
+        schema_builder.py:578-631). The element rule is the sequence
+        check's own (``dsl._sequence_check``); this adds the key path to
+        its violation channel, whose element errors carry no mapping ctx
+        (depth > key depth, so ``error_type`` is never set to 'dictionary
+        value' — schema_builder.py:369-371), and handles dict
+        alternatives and the empty schema.
 
         Returns (out_col, single_errs, err_arrays)."""
-        from .errors import truncate_repr
-
         elem_t = dtype.elementType
         if any(isinstance(a, dict) for a in alternatives):
             dicts = [a for a in alternatives if isinstance(a, dict)]
@@ -2473,13 +2456,8 @@ class Schema:
                 if isinstance(a, dict) else a
                 for a in alternatives
             ]
-        removes = [compile_validator(a.schema, elem_t)
-                   for a in alternatives if isinstance(a, Remove)]
-        keeps = [compile_validator(a, elem_t)
-                 for a in alternatives if not isinstance(a, Remove)]
-        out_col = compile_validator(alternatives, dtype).out(col)
-        prefix_lits = _path_lits(prefix)
-
+        rc = compile_validator(alternatives, dtype)
+        out_col = rc.out(col)
         if not alternatives:
             # empty schema rejects any non-empty sequence
             # (schema_builder.py:598-603); the error's path equals the
@@ -2492,211 +2470,11 @@ class Schema:
                            col.isNotNull() & (F.size(col) > 0),
                            ctx="dictionary value")
             ], []
-
-        udf_mode = any(c.err_arr is not None for c in removes + keeps)
-        if udf_mode:
-            # UDF-backed alternatives: Python UDFs are illegal inside
-            # higher-order lambda BODIES but legal as higher-order
-            # ARGUMENTS — zip index + value + per-alternative err arrays
-            # positionally, then transform with PURE lambdas over the
-            # zipped struct fields
-            rm_arrs = [dsl._err_arr_of(rc)(col) for rc in removes]
-            kp_arrs = [dsl._err_arr_of(kc)(col) for kc in keeps]
-            z = F.arrays_zip(
-                F.sequence(F.lit(0), F.size(col) - 1).alias("i"),
-                col.alias("v"),
-                *[a.alias(f"r{k}") for k, a in enumerate(rm_arrs)],
-                *[a.alias(f"k{k}") for k, a in enumerate(kp_arrs)],
-            )
-
-            def per_s(s):
-                removed = F.lit(False)
-                for k in range(len(rm_arrs)):
-                    removed = removed | s[f"r{k}"].isNull()
-                matched = F.lit(False)
-                for k in range(len(kp_arrs)):
-                    matched = matched | s[f"k{k}"].isNull()
-                if keeps:
-                    last = s[f"k{len(kp_arrs) - 1}"]
-                    msg, et = last["message"], last["error_type"]
-                else:
-                    msg = F.lit("not a valid value")
-                    et = F.lit("ValueInvalid")
-                failing = ~F.coalesce(removed, F.lit(False)) & ~F.coalesce(
-                    matched, F.lit(False)
-                )
-                return F.when(
-                    failing,
-                    F.struct(
-                        F.array(*prefix_lits,
-                                s["i"].cast("string")).alias("path"),
-                        msg.alias("message"),
-                        et.alias("error_type"),
-                        truncate_repr(
-                            py_repr_col(s["v"], elem_t)).alias("offending"),
-                        F.lit(None).cast("string").alias("ctx"),
-                    ),
-                ).otherwise(F.lit(None))
-
-            arr = F.when(
-                col.isNotNull() & (F.size(col) > 0),
-                F.filter(F.transform(z, per_s), lambda s: s.isNotNull()),
-            )
-            return out_col, [], [arr]
-
-        def per_elem(i):
-            idx = (i + 1).cast("int")
-            x = F.try_element_at(col, idx)
-            rm_errs = [rc.err(x) for rc in removes]
-            kp_errs = [kc.err(x) for kc in keeps]
-            removed = F.lit(False)
-            for e in rm_errs:
-                removed = removed | e.isNull()
-            matched = F.lit(False)
-            for e in kp_errs:
-                matched = matched | e.isNull()
-            if keeps:
-                last = kp_errs[-1]
-                msg, et = last["message"], last["error_type"]
-            else:
-                msg = F.lit("not a valid value")
-                et = F.lit("ValueInvalid")
-            failing = ~F.coalesce(removed, F.lit(False)) & ~F.coalesce(
-                matched, F.lit(False)
-            )
-            return F.when(
-                failing,
-                F.struct(
-                    F.array(*prefix_lits, i.cast("string")).alias("path"),
-                    msg.alias("message"),
-                    et.alias("error_type"),
-                    truncate_repr(py_repr_col(x, elem_t)).alias("offending"),
-                    F.lit(None).cast("string").alias("ctx"),
-                ),
-            ).otherwise(F.lit(None))
-
-        keep_srcs = [a for a in alternatives if not isinstance(a, Remove)]
-        if (isinstance(elem_t, T.ArrayType) and not removes
-                and _viable_seq_alts_all_lists(keep_srcs, elem_t)):
-            # NESTED sequence schemas ([[...]]): the reference re-raises
-            # any error DEEPER than the element index immediately
-            # (schema_builder.py:616-620), so the first element whose
-            # inner sequence fails aborts the whole validation with the
-            # inner errors (paths [i][j]); shallow errors accumulated for
-            # earlier elements are discarded. Only the FIRST list
-            # alternative is ever reachable for a non-null element (its
-            # inner failure aborts before later alternatives are tried).
-            arr = F.when(
-                col.isNotNull() & (F.size(col) > 0),
-                self._seq_viols(alternatives, col, dtype,
-                                list(prefix_lits)),
-            )
-            return out_col, [], [arr]
-
         arr = F.when(
             col.isNotNull() & (F.size(col) > 0),
-            F.filter(
-                F.transform(
-                    F.sequence(F.lit(0), F.size(col) - 1), per_elem
-                ),
-                lambda s: s.isNotNull(),
-            ),
+            dsl.prefix_paths(rc.elem_viols(col), _path_lits(prefix)),
         )
         return out_col, [], [arr]
-
-    def _seq_viols(self, alternatives: list, col: Column,
-                   dtype: T.ArrayType, path_cols: list):
-        """Violations array for one ARRAY cell against list alternatives
-        with the reference's abort semantics (schema_builder.py:605-631):
-        shallow per-element errors (paths ``path + [i]``) accumulate; the
-        first element producing DEEPER errors aborts — only its inner
-        errors surface. ``path_cols`` are ready string Columns/literals so
-        runtime indices nest arbitrarily deep."""
-        from .errors import truncate_repr
-
-        elem_t = dtype.elementType
-        keep_srcs = [a for a in alternatives if not isinstance(a, Remove)]
-        nested = (isinstance(elem_t, T.ArrayType)
-                  and _viable_seq_alts_all_lists(keep_srcs, elem_t))
-        empty = F.array().cast(_VIOL_ARR_T)
-
-        if nested:
-            inner_alts = next(a for a in keep_srcs if isinstance(a, list))
-
-            def per(i):
-                x = F.try_element_at(col, (i + 1).cast("int"))
-                deep = F.when(
-                    x.isNotNull() & (F.size(x) > 0),
-                    self._seq_viols(inner_alts, x, elem_t,
-                                    path_cols + [i.cast("string")]),
-                ).otherwise(empty)
-                shallow = F.when(
-                    x.isNull(),
-                    F.struct(
-                        F.array(*path_cols,
-                                i.cast("string")).alias("path"),
-                        F.lit("expected a list").alias("message"),
-                        F.lit("SequenceTypeInvalid").alias("error_type"),
-                        F.lit("None").alias("offending"),
-                        F.lit(None).cast("string").alias("ctx"),
-                    ),
-                ).otherwise(F.lit(None))
-                return F.struct(deep.alias("deep"), shallow.alias("shallow"))
-
-            z = F.transform(F.sequence(F.lit(0), F.size(col) - 1), per)
-            deeps = F.filter(
-                F.transform(z, lambda s: s["deep"]),
-                lambda a: F.size(a) > 0,
-            )
-            shallows = F.filter(
-                F.transform(z, lambda s: s["shallow"]),
-                lambda s: s.isNotNull(),
-            ).cast(_VIOL_ARR_T)
-            return F.when(
-                F.size(deeps) > 0, F.element_at(deeps, 1)
-            ).otherwise(shallows)
-
-        removes_c = [compile_validator(a.schema, elem_t)
-                     for a in alternatives if isinstance(a, Remove)]
-        keeps_c = [compile_validator(a, elem_t) for a in keep_srcs]
-
-        def per_flat(i):
-            x = F.try_element_at(col, (i + 1).cast("int"))
-            removed = F.lit(False)
-            for rc in removes_c:
-                removed = removed | rc.err(x).isNull()
-            matched = F.lit(False)
-            kp_errs = [kc.err(x) for kc in keeps_c]
-            for e in kp_errs:
-                matched = matched | e.isNull()
-            if keeps_c:
-                last = kp_errs[-1]
-                msg, et = last["message"], last["error_type"]
-            else:
-                msg = F.lit("not a valid value")
-                et = F.lit("ValueInvalid")
-            failing = ~F.coalesce(removed, F.lit(False)) & ~F.coalesce(
-                matched, F.lit(False))
-            return F.when(
-                failing,
-                F.struct(
-                    F.array(*path_cols, i.cast("string")).alias("path"),
-                    msg.alias("message"),
-                    et.alias("error_type"),
-                    truncate_repr(
-                        py_repr_col(x, elem_t)).alias("offending"),
-                    F.lit(None).cast("string").alias("ctx"),
-                ),
-            ).otherwise(F.lit(None))
-
-        return F.when(
-            F.size(col) > 0,
-            F.filter(
-                F.transform(F.sequence(F.lit(0), F.size(col) - 1),
-                            per_flat),
-                lambda s: s.isNotNull(),
-            ).cast(_VIOL_ARR_T),
-        ).otherwise(empty)
 
     def _validate_dict_elements(self, schema_dict: dict, col: Column,
                                 dtype: T.ArrayType,
@@ -2725,7 +2503,7 @@ class Schema:
             ),
         )
 
-        def per_elem(i):
+        def elem_errs(i):
             x = F.try_element_at(col, (i + 1).cast("int"))
             nested: list[Column] = []
             _, errs = sub._validate_struct(
@@ -2747,7 +2525,7 @@ class Schema:
         arr = F.when(
             col.isNotNull() & (F.size(col) > 0),
             F.flatten(F.transform(
-                F.sequence(F.lit(0), F.size(col) - 1), per_elem
+                F.sequence(F.lit(0), F.size(col) - 1), elem_errs
             )),
         )
         return out_col, [], [arr]
@@ -3287,6 +3065,220 @@ class Schema:
         out_struct = F.when(col.isNotNull(), F.struct(*outs)) if outs else col
         return finish(out_struct)
 
+    def _driver_validate_mapping(self, data: dict, spark) -> dict:
+        """Single-document mapping validation for documents whose KEYS or
+        VALUES have no uniform column representation (tuple/object keys,
+        mixed int/str keys, mixed-type values): the reference's
+        ``validate_mapping`` (schema_builder.py:289-409) replicated
+        driver-side, with every VALUE (and transforming KEY) riding the
+        column engine individually via a nested ``Schema(...)`` call."""
+        smap = self.schema
+
+        # Exclusive/Inclusive group checks run BEFORE any value
+        # validation and short-circuit (reference schema_builder.py
+        # _compile_dict:520-571) — exclusion first, raise, then
+        # inclusion (first failing group only), raise.
+        groups_ex, groups_in = {}, {}
+        for node in smap:
+            if isinstance(node, dsl.Exclusive):
+                groups_ex.setdefault(
+                    node.group_of_exclusion, []).append(node)
+            elif isinstance(node, dsl.Inclusive):
+                groups_in.setdefault(
+                    node.group_of_inclusion, []).append(node)
+        gerrors = []
+        for label, group in groups_ex.items():
+            exists = False
+            for excl in group:
+                if excl.schema in data:
+                    if exists:
+                        msg = excl.msg or (
+                            "two or more values in the same group of "
+                            "exclusion '%s'" % label)
+                        gerrors.append(er.ExclusiveInvalid(
+                            msg,
+                            [er.VirtualPathComponent("<%s>" % label)]))
+                        break
+                    exists = True
+        if gerrors:
+            raise er.MultipleInvalid(gerrors)
+        for label, group in groups_in.items():
+            included = [node.schema in data for node in group]
+            if any(included) and not all(included):
+                msg = ("some but not all values in the same group of "
+                       "inclusion '%s'" % label)
+                for g in group:
+                    if g.msg:
+                        msg = g.msg
+                        break
+                gerrors.append(er.InclusiveInvalid(
+                    msg, [er.VirtualPathComponent("<%s>" % label)]))
+                break
+        if gerrors:
+            raise er.MultipleInvalid(gerrors)
+
+        # Candidate bucketing (reference schema_builder.py:273-287):
+        # after priority sorting, literal/marker-literal candidates are
+        # tried for THEIR data key before any wildcard candidate.
+        ordered = sorted(smap.items(), key=lambda kv: _key_prio(kv[0]))
+        prim = (bool, bytes, int, str, float, complex)
+        cands_by_key, wildcard_cands = {}, []
+        for skey, svalue in ordered:
+            if type(skey) in prim:
+                cands_by_key.setdefault(skey, []).append((skey, svalue))
+            elif isinstance(skey, dsl.Marker) \
+                    and type(skey.schema) in prim:
+                cands_by_key.setdefault(
+                    skey.schema, []).append((skey, svalue))
+            else:
+                wildcard_cands.append((skey, svalue))
+
+        # required bookkeeping (schema_builder.py:246-263)
+        required_keys = set()
+        complex_required = []  # (marker, [candidate literals])
+        default_items = []
+        for sk in smap:
+            if sk is dsl.Extra or isinstance(sk, (dsl.Extra, dsl.Remove)):
+                continue
+            is_marker = isinstance(sk, dsl.Marker)
+            if is_marker and getattr(sk, "default", dsl.UNDEFINED) \
+                    is not dsl.UNDEFINED:
+                default_items.append(sk)
+            if isinstance(sk, dsl.Required) or (
+                self.required and not (
+                    is_marker and isinstance(sk, dsl.Optional))
+            ):
+                if is_marker and isinstance(sk.schema, dsl.Any):
+                    cands = [b for b in sk.schema.validators
+                             if not isinstance(b, (type, dsl.Validator))]
+                    complex_required.append((sk, cands))
+                else:
+                    required_keys.add(sk)
+
+        key_value_map = dict(data)
+        for marker in default_items:
+            if marker.schema not in key_value_map:
+                key_value_map[marker.schema] = _resolve_default(
+                    marker.default)
+
+        errors = []
+        # complex required: at least one candidate key present
+        # (schema_builder.py:311-325)
+        for marker, cands in complex_required:
+            if not any(c in key_value_map for c in cands):
+                msg = marker.msg or (
+                    "at least one of %s is required" % (cands,))
+                errors.append(er.RequiredFieldInvalid(msg, [marker]))
+
+        out = {}
+        for key, value in key_value_map.items():
+            key_path = [key]
+            key_error = None
+            claimed = False
+            remove_key = False
+            try:
+                bucket = cands_by_key.get(key, [])
+            except TypeError:  # unhashable data key: wildcards only
+                bucket = []
+            for skey, svalue in itertools.chain(bucket, wildcard_cands):
+                if skey is dsl.Extra or isinstance(skey, dsl.Extra):
+                    matched, new_key, match_err = True, key, None
+                else:
+                    matched, new_key, match_err = _driver_match_key(
+                        skey, key, spark)
+                if not matched:
+                    # only WILDCARD candidates contribute a key error
+                    # (literal candidates for other keys are irrelevant —
+                    # candidate bucketing, schema_builder.py:273-287)
+                    own = match_err
+                    if own is not None:
+                        # a callable/validator key raised its OWN Invalid:
+                        # the reference surfaces it verbatim with the key
+                        # path prepended (schema_builder.py:338-346)
+                        if not own.path:
+                            own._path = list(key_path)
+                        if key_error is None or (
+                                len(own.path) > len(key_error.path)):
+                            key_error = own
+                        continue
+                    inner = (skey.schema if isinstance(skey, dsl.Marker)
+                             else skey)
+                    if key_error is None and isinstance(inner, type):
+                        key_error = er.TypeInvalid(
+                            "expected %s" % inner.__name__, list(key_path))
+                    elif key_error is None and (
+                        isinstance(inner, dsl.Validator) or (
+                            callable(inner)
+                            and not isinstance(inner, (str, bytes)))
+                    ) and not isinstance(inner, (str, bytes, bool, int,
+                                                 float, tuple, frozenset)):
+                        key_error = er.ValueInvalid(
+                            "not a valid value", list(key_path))
+                    continue
+                is_remove = isinstance(skey, dsl.Remove)
+                exception_errors = []
+                try:
+                    cval = Schema(
+                        svalue, required=self.required, extra=self.extra
+                    )(value, spark)
+                    if is_remove:
+                        # reference schema_builder.py:355-358: mark for
+                        # removal and KEEP scanning — a later candidate
+                        # may reclaim (and keep) the key
+                        remove_key = True
+                        continue
+                    out[new_key] = cval
+                    claimed = True
+                    for marker, _c in complex_required:
+                        required_keys.discard(marker)
+                    required_keys.discard(skey)
+                    break
+                except er.MultipleInvalid as e:
+                    exception_errors.extend(e.errors)
+                except er.Invalid as e:
+                    exception_errors.append(e)
+                if is_remove or remove_key:
+                    # Remove fall-through on value mismatch, and silent
+                    # skip of later candidates' errors once removal is
+                    # pending (schema_builder.py:365-366)
+                    continue
+                # no backtracking once a key is selected
+                # (schema_builder.py:347-348): record and stop
+                for err in exception_errors:
+                    if getattr(err, "no_path_attach", False):
+                        pass  # SomeOf-style: stays where it was raised
+                    elif not err.path:
+                        err._path = list(key_path)
+                        if err.error_type is None:
+                            err.error_type = "dictionary value"
+                    else:
+                        err.prepend(list(key_path))
+                    errors.append(err)
+                required_keys.discard(skey)
+                claimed = True
+                break
+            if claimed:
+                continue
+            if remove_key:
+                continue  # no later candidate reclaimed it: drop the key
+            if self.extra == ALLOW_EXTRA:
+                out[key] = value
+            elif self.extra == REMOVE_EXTRA:
+                continue
+            elif key_error is not None:
+                errors.append(key_error)
+            else:
+                errors.append(er.Invalid("extra keys not allowed", key_path))
+
+        for sk in required_keys:
+            msg = (sk.msg if isinstance(sk, dsl.Marker) and sk.msg
+                   else "required key not provided")
+            name = sk.schema if isinstance(sk, dsl.Marker) else sk
+            errors.append(er.RequiredFieldInvalid(msg, [name]))
+        if errors:
+            raise er.MultipleInvalid(errors)
+        return out
+
 
 _PY_TO_SPARK = {
     bool: T.BooleanType(), int: T.LongType(), float: T.DoubleType(),
@@ -3739,224 +3731,6 @@ def _key_prio(skey):
     return 0
 
 
-class _DriverMappingMixin:
-    """Single-document mapping validation for documents whose KEYS or
-    VALUES have no uniform column representation (tuple/object keys,
-    mixed int/str keys, mixed-type values): the reference's
-    ``validate_mapping`` (schema_builder.py:289-409) replicated
-    driver-side, with every VALUE (and transforming KEY) riding the
-    column engine individually via a nested ``Schema(...)`` call."""
-
-    def _driver_validate_mapping(self, data: dict, spark) -> dict:
-        smap = self.schema
-
-        # Exclusive/Inclusive group checks run BEFORE any value
-        # validation and short-circuit (reference schema_builder.py
-        # _compile_dict:520-571) — exclusion first, raise, then
-        # inclusion (first failing group only), raise.
-        groups_ex, groups_in = {}, {}
-        for node in smap:
-            if isinstance(node, dsl.Exclusive):
-                groups_ex.setdefault(
-                    node.group_of_exclusion, []).append(node)
-            elif isinstance(node, dsl.Inclusive):
-                groups_in.setdefault(
-                    node.group_of_inclusion, []).append(node)
-        gerrors = []
-        for label, group in groups_ex.items():
-            exists = False
-            for excl in group:
-                if excl.schema in data:
-                    if exists:
-                        msg = excl.msg or (
-                            "two or more values in the same group of "
-                            "exclusion '%s'" % label)
-                        gerrors.append(er.ExclusiveInvalid(
-                            msg,
-                            [er.VirtualPathComponent("<%s>" % label)]))
-                        break
-                    exists = True
-        if gerrors:
-            raise er.MultipleInvalid(gerrors)
-        for label, group in groups_in.items():
-            included = [node.schema in data for node in group]
-            if any(included) and not all(included):
-                msg = ("some but not all values in the same group of "
-                       "inclusion '%s'" % label)
-                for g in group:
-                    if g.msg:
-                        msg = g.msg
-                        break
-                gerrors.append(er.InclusiveInvalid(
-                    msg, [er.VirtualPathComponent("<%s>" % label)]))
-                break
-        if gerrors:
-            raise er.MultipleInvalid(gerrors)
-
-        # Candidate bucketing (reference schema_builder.py:273-287):
-        # after priority sorting, literal/marker-literal candidates are
-        # tried for THEIR data key before any wildcard candidate.
-        ordered = sorted(smap.items(), key=lambda kv: _key_prio(kv[0]))
-        prim = (bool, bytes, int, str, float, complex)
-        cands_by_key, wildcard_cands = {}, []
-        for skey, svalue in ordered:
-            if type(skey) in prim:
-                cands_by_key.setdefault(skey, []).append((skey, svalue))
-            elif isinstance(skey, dsl.Marker) \
-                    and type(skey.schema) in prim:
-                cands_by_key.setdefault(
-                    skey.schema, []).append((skey, svalue))
-            else:
-                wildcard_cands.append((skey, svalue))
-
-        # required bookkeeping (schema_builder.py:246-263)
-        required_keys = set()
-        complex_required = []  # (marker, [candidate literals])
-        default_items = []
-        for sk in smap:
-            if sk is dsl.Extra or isinstance(sk, (dsl.Extra, dsl.Remove)):
-                continue
-            is_marker = isinstance(sk, dsl.Marker)
-            if is_marker and getattr(sk, "default", dsl.UNDEFINED) \
-                    is not dsl.UNDEFINED:
-                default_items.append(sk)
-            if isinstance(sk, dsl.Required) or (
-                self.required and not (
-                    is_marker and isinstance(sk, dsl.Optional))
-            ):
-                if is_marker and isinstance(sk.schema, dsl.Any):
-                    cands = [b for b in sk.schema.validators
-                             if not isinstance(b, (type, dsl.Validator))]
-                    complex_required.append((sk, cands))
-                else:
-                    required_keys.add(sk)
-
-        key_value_map = dict(data)
-        for marker in default_items:
-            if marker.schema not in key_value_map:
-                key_value_map[marker.schema] = _resolve_default(
-                    marker.default)
-
-        errors = []
-        # complex required: at least one candidate key present
-        # (schema_builder.py:311-325)
-        for marker, cands in complex_required:
-            if not any(c in key_value_map for c in cands):
-                msg = marker.msg or (
-                    "at least one of %s is required" % (cands,))
-                errors.append(er.RequiredFieldInvalid(msg, [marker]))
-
-        out = {}
-        for key, value in key_value_map.items():
-            key_path = [key]
-            key_error = None
-            claimed = False
-            remove_key = False
-            try:
-                bucket = cands_by_key.get(key, [])
-            except TypeError:  # unhashable data key: wildcards only
-                bucket = []
-            for skey, svalue in itertools.chain(bucket, wildcard_cands):
-                if skey is dsl.Extra or isinstance(skey, dsl.Extra):
-                    matched, new_key, match_err = True, key, None
-                else:
-                    matched, new_key, match_err = _driver_match_key(
-                        skey, key, spark)
-                if not matched:
-                    # only WILDCARD candidates contribute a key error
-                    # (literal candidates for other keys are irrelevant —
-                    # candidate bucketing, schema_builder.py:273-287)
-                    own = match_err
-                    if own is not None:
-                        # a callable/validator key raised its OWN Invalid:
-                        # the reference surfaces it verbatim with the key
-                        # path prepended (schema_builder.py:338-346)
-                        if not own.path:
-                            own._path = list(key_path)
-                        if key_error is None or (
-                                len(own.path) > len(key_error.path)):
-                            key_error = own
-                        continue
-                    inner = (skey.schema if isinstance(skey, dsl.Marker)
-                             else skey)
-                    if key_error is None and isinstance(inner, type):
-                        key_error = er.TypeInvalid(
-                            "expected %s" % inner.__name__, list(key_path))
-                    elif key_error is None and (
-                        isinstance(inner, dsl.Validator) or (
-                            callable(inner)
-                            and not isinstance(inner, (str, bytes)))
-                    ) and not isinstance(inner, (str, bytes, bool, int,
-                                                 float, tuple, frozenset)):
-                        key_error = er.ValueInvalid(
-                            "not a valid value", list(key_path))
-                    continue
-                is_remove = isinstance(skey, dsl.Remove)
-                exception_errors = []
-                try:
-                    cval = Schema(
-                        svalue, required=self.required, extra=self.extra
-                    )(value, spark)
-                    if is_remove:
-                        # reference schema_builder.py:355-358: mark for
-                        # removal and KEEP scanning — a later candidate
-                        # may reclaim (and keep) the key
-                        remove_key = True
-                        continue
-                    out[new_key] = cval
-                    claimed = True
-                    for marker, _c in complex_required:
-                        required_keys.discard(marker)
-                    required_keys.discard(skey)
-                    break
-                except er.MultipleInvalid as e:
-                    exception_errors.extend(e.errors)
-                except er.Invalid as e:
-                    exception_errors.append(e)
-                if is_remove or remove_key:
-                    # Remove fall-through on value mismatch, and silent
-                    # skip of later candidates' errors once removal is
-                    # pending (schema_builder.py:365-366)
-                    continue
-                # no backtracking once a key is selected
-                # (schema_builder.py:347-348): record and stop
-                for err in exception_errors:
-                    if getattr(err, "no_path_attach", False):
-                        pass  # SomeOf-style: stays where it was raised
-                    elif not err.path:
-                        err._path = list(key_path)
-                        if err.error_type is None:
-                            err.error_type = "dictionary value"
-                    else:
-                        err.prepend(list(key_path))
-                    errors.append(err)
-                required_keys.discard(skey)
-                claimed = True
-                break
-            if claimed:
-                continue
-            if remove_key:
-                continue  # no later candidate reclaimed it: drop the key
-            if self.extra == ALLOW_EXTRA:
-                out[key] = value
-            elif self.extra == REMOVE_EXTRA:
-                continue
-            elif key_error is not None:
-                errors.append(key_error)
-            else:
-                errors.append(er.Invalid("extra keys not allowed", key_path))
-
-        for sk in required_keys:
-            msg = (sk.msg if isinstance(sk, dsl.Marker) and sk.msg
-                   else "required key not provided")
-            name = sk.schema if isinstance(sk, dsl.Marker) else sk
-            errors.append(er.RequiredFieldInvalid(msg, [name]))
-        if errors:
-            raise er.MultipleInvalid(errors)
-        return out
-
-
-Schema._driver_validate_mapping = _DriverMappingMixin._driver_validate_mapping
 
 
 def _class_value_verdict(node, v):
@@ -4379,20 +4153,6 @@ def _set_nested(out: dict, path: tuple, value) -> None:
     cur[path[-1]] = value
 
 
-def _accepts_none(s) -> bool:
-    """Does a value schema admit None as a VALUE (validators.py:622-635
-    Maybe = Any(None, v); Any branches recurse)? Used by the single-
-    document path to short-circuit a root None, which a carrier column
-    would otherwise read as an absent key."""
-    if s is None or s is type(None):
-        return True
-    if isinstance(s, dsl.Maybe):
-        return True
-    if isinstance(s, dsl.Any):
-        return any(_accepts_none(b) for b in s.validators)
-    return False
-
-
 def _assert_representable(data, path=()):
     """Single-document mode rides a typed one-row DataFrame, so a MIXED-
     type sequence ([1, 'a']) has no column type. Raise the engine's
@@ -4533,29 +4293,6 @@ def _path_lits(path) -> list[Column]:
     strings; runtime components (e.g. a sequence index inside
     ``F.transform``) are already Columns and pass through."""
     return [p if isinstance(p, Column) else F.lit(str(p)) for p in path]
-
-
-_VIOL_ARR_T = (
-    "array<struct<path:array<string>,message:string,"
-    "error_type:string,offending:string,ctx:string>>"
-)
-
-
-def _viable_seq_alts_all_lists(keep_srcs, elem_t) -> bool:
-    """Over an array<array<...>> column, scalar-literal alternatives can
-    never match an ARRAY element (Python cross-type equality is False) —
-    so ``Schema([[2, 3], 6])`` routes through the nested-sequence
-    machinery exactly like ``Schema([[2, 3]])``: the list alternative
-    alone decides, its deep inner errors abort (README.md 'matching is
-    depth-first and fail-fast': 'not a valid value @ data[0][0]')."""
-    viable = [
-        a for a in keep_srcs
-        if isinstance(a, list)
-        or isinstance(a, (dsl.Validator, type))
-        or callable(a)
-        or dsl._lit_comparable(a, elem_t)
-    ]
-    return bool(viable) and all(isinstance(a, list) for a in viable)
 
 
 def _maybe_none_collapse(key_path, singles, arrs, off_col, off_t):

@@ -613,7 +613,7 @@ def remove_boilerplate(
 ) -> DataFrame:
     """Strip lines that repeat across >= ``min_docs`` documents (or,
     if ``min_frac`` is given, >= that fraction of the source's
-    documents) of the same source. Returns the input columns with
+    documents and >= 2 of them) of the same source. Returns the input columns with
     ``text_col`` rebuilt (original line order, blank lines dropped)
     plus ``lines_removed``; a document whose every line is boilerplate
     survives with empty text. ``corpus_count`` (table stats) skips the
@@ -642,6 +642,10 @@ def remove_boilerplate(
                 .where(F.col("df_docs")
                        >= F.col("__src_docs") * F.lit(min_frac))
             )
+        # a line seen in one document does not repeat, however small its
+        # source: without this, a source of at most 1/min_frac documents
+        # would lose every line
+        ldf = ldf.where(F.col("df_docs") >= 2)
     else:
         ldf = ldf.where(F.col("df_docs") >= min_docs)
     flagged = ldf.select(
