@@ -404,35 +404,29 @@ def _type_check(pytype, dtype) -> RowCheck:
 
 def _elem_verdicts(col, checks, outs=()):
     """The one input of every element-wise rule (list, set, Unordered).
-    Returns ``(z, err, out)``: ``z`` holds one struct per element with
-    its index ``i``, the element ``v`` and, for every check that runs
-    Python (``err_arr`` set), that check's Arrow-lifted err ``e<k>`` (and
-    output ``o<k>`` for ``k`` in ``outs``). The lifted arrays are zipped
-    with the elements OUTSIDE any lambda: Spark rejects a Python UDF
-    inside a higher-order lambda (UNSUPPORTED_FEATURE.
+    Returns ``(z, val, err, out)``: ``z`` is the array the rule's lambdas
+    iterate, ``val(s)`` the element at ``s``, and ``err(s, k)`` /
+    ``out(s, k)`` check ``k``'s err / output for it. A pure check is
+    evaluated on the element in place. A check that runs Python
+    (``err_arr`` set) cannot be: Spark rejects a Python UDF inside a
+    higher-order lambda (UNSUPPORTED_FEATURE.
     LAMBDA_FUNCTION_WITH_PYTHON_UDF) but takes UDF results as its
-    arguments. ``err(s, k)`` / ``out(s, k)`` give check ``k``'s err /
-    output for an element ``s`` inside a consumer's pure lambda: the
-    lifted field, or the pure check evaluated on the element in place.
-
-    Higher-order functions run interpreted and ``arrays_zip`` costs a
-    pass of its own, so pure checks get no array of their own and the
-    zip is built only when there is a lifted array to zip."""
+    arguments, so its Arrow-lifted err ``e<k>`` (and output ``o<k>`` for
+    ``k`` in ``outs``) is zipped with the elements ``v`` OUTSIDE any
+    lambda. Higher-order functions run interpreted and every struct array
+    costs a pass of its own, so ``z`` is the bare element array unless
+    there is a lifted array to zip; a rule that needs the element index
+    takes it from ``F.transform``'s ``(s, i)`` lambda."""
     lifted = [k for k, ch in enumerate(checks) if ch.err_arr is not None]
-    fields = ([f"e{k}" for k in lifted]
-              + [f"o{k}" for k in outs if k in lifted])
-    if lifted:
-        col = F.arrays_zip(
-            col.alias("v"),
-            *[checks[k].err_arr(col).alias(f"e{k}") for k in lifted],
-            *[checks[k].out_arr(col).alias(f"o{k}") for k in outs
-              if k in lifted],
-        )
-    z = F.transform(col, lambda x, i: F.struct(
-        i.alias("i"),
-        (x["v"] if lifted else x).alias("v"),
-        *[x[f].alias(f) for f in fields],
-    ))
+    if not lifted:
+        return (col, lambda s: s, lambda s, k: checks[k].err(s),
+                lambda s, k: checks[k].out(s))
+    z = F.arrays_zip(
+        col.alias("v"),
+        *[checks[k].err_arr(col).alias(f"e{k}") for k in lifted],
+        *[checks[k].out_arr(col).alias(f"o{k}") for k in outs
+          if k in lifted],
+    )
 
     def err(s, k):
         return s[f"e{k}"] if k in lifted else checks[k].err(s["v"])
@@ -440,7 +434,7 @@ def _elem_verdicts(col, checks, outs=()):
     def out(s, k):
         return s[f"o{k}"] if k in lifted else checks[k].out(s["v"])
 
-    return z, err, out
+    return z, lambda s: s["v"], err, out
 
 
 def _first_match(err, s, ks, then, otherwise):
@@ -523,7 +517,7 @@ def _sequence_check(alternatives, dtype) -> RowCheck:
     out_arr_t = T.ArrayType(out_elem_t, True) if transforms else dtype
 
     def out(col):
-        z, e, o = _elem_verdicts(col, checks, outs=keep_idx)
+        z, v, e, o = _elem_verdicts(col, checks, outs=keep_idx)
         # non-matching elements are filtered out before the transform, so
         # the no-match fallback is dead — but it must still TYPE-unify
         # with the alternatives' outputs
@@ -532,11 +526,11 @@ def _sequence_check(alternatives, dtype) -> RowCheck:
                 e, s, every, lambda k: F.lit(k in keep_idx), F.lit(False))),
             lambda s: _first_match(
                 e, s, keep_idx, lambda k: o(s, k),
-                F.lit(None).cast(out_elem_t) if transforms else s["v"]),
+                F.lit(None).cast(out_elem_t) if transforms else v(s)),
         )
 
     def err(col):
-        z, e, _ = _elem_verdicts(col, checks)
+        z, _, e, _ = _elem_verdicts(col, checks)
         bad = F.exists(z, lambda s: _no_match(e, s, every))
         return F.when(
             col.isNull() | ~bad, F.lit(None)
@@ -552,16 +546,16 @@ def _sequence_check(alternatives, dtype) -> RowCheck:
         rc.elem_viols = lambda col: _nested_viols(col, inner.elem_viols)
     else:
         def elem_viols(col):
-            z, e, _ = _elem_verdicts(col, checks)
+            z, v, e, _ = _elem_verdicts(col, checks)
 
-            def viol(s):
+            def viol(s, i):
                 last = (e(s, keep_idx[-1]) if keep_idx
                         else err_struct("not a valid value", "ValueInvalid"))
                 return F.when(_no_match(e, s, every), F.struct(
-                    F.array(s["i"].cast("string")).alias("path"),
+                    F.array(i.cast("string")).alias("path"),
                     last["message"].alias("message"),
                     last["error_type"].alias("error_type"),
-                    truncate_repr(py_repr_col(s["v"], elem_t))
+                    truncate_repr(py_repr_col(v(s), elem_t))
                     .alias("offending"),
                     F.lit(None).cast("string").alias("ctx"),
                 ))
@@ -633,7 +627,7 @@ def _set_check(schema, dtype) -> RowCheck:
     every = range(len(checks))
 
     def err(col):
-        z, e, _ = _elem_verdicts(col, checks)
+        z, _, e, _ = _elem_verdicts(col, checks)
         bad = F.exists(z, lambda s: _no_match(e, s, every))
         return F.when(col.isNull() | ~bad, F.lit(None)).otherwise(
             err_struct(f"invalid value in {type_name}", "Invalid")
@@ -2570,16 +2564,17 @@ class Unordered(Validator):
             the reference accumulates one Invalid per unmatched element
             into a MultipleInvalid (validators.py:1089-1108)."""
             len_ok = F.size(col) == F.lit(n)
-            z, e, _ = _elem_verdicts(col, checks)
+            z, v, e, _ = _elem_verdicts(col, checks)
 
             def step(st, s):
                 """One greedy step (validators.py:1072-1088): element
-                ``s`` consumes the FIRST not-yet-consumed validator it
-                satisfies (``mask`` bit set); an element satisfying none
-                is 'missing' and appends its message. Scalar mask +
-                array-of-strings state on purpose: struct-typed values in
-                nested CASE chains trip a Janino codegen bug ("isNull_N
-                is not an rvalue"); err structs are built at the top."""
+                ``s`` (index ``i``) consumes the FIRST not-yet-consumed
+                validator it satisfies (``mask`` bit set); an element
+                satisfying none is 'missing' and appends its message.
+                Scalar index + mask + array-of-strings state on purpose:
+                struct-typed values in nested CASE chains trip a Janino
+                codegen bug ("isNull_N is not an rvalue"); err structs
+                are built at the top."""
                 mask = st["mask"]
                 matched = F.lit(False)
                 mask_expr = None
@@ -2598,10 +2593,11 @@ class Unordered(Validator):
                 # validator' (validators.py:1090-1100); str(value) form
                 fail_msg = F.lit(self.msg) if self.msg else F.format_string(
                     "Element #%s (%s) is not valid against any validator",
-                    s["i"].cast("string"),
-                    F.coalesce(s["v"].cast("string"), F.lit("None")),
+                    st["i"].cast("string"),
+                    F.coalesce(v(s).cast("string"), F.lit("None")),
                 )
                 return F.struct(
+                    (st["i"] + 1).alias("i"),
                     mask_expr.cast("long").alias("mask"),
                     F.when(matched, st["msgs"])
                     .otherwise(F.array_append(st["msgs"], fail_msg))
@@ -2611,6 +2607,7 @@ class Unordered(Validator):
             folded = F.aggregate(
                 z,
                 F.struct(
+                    F.lit(0).alias("i"),
                     F.lit(0).cast("long").alias("mask"),
                     F.array().cast("array<string>").alias("msgs"),
                 ),

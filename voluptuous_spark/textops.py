@@ -613,12 +613,12 @@ def remove_boilerplate(
 ) -> DataFrame:
     """Strip lines that repeat across >= ``min_docs`` documents (or,
     if ``min_frac`` is given, >= that fraction of the source's
-    documents and >= 2 of them) of the same source. Returns the input columns with
-    ``text_col`` rebuilt (original line order, blank lines dropped)
-    plus ``lines_removed``; a document whose every line is boilerplate
-    survives with empty text. ``corpus_count`` (table stats) skips the
-    one ``df.count()`` driver action the sourceless ``min_frac`` path
-    otherwise runs.
+    documents and >= 2 of them) of the same source. Returns the input
+    columns with ``text_col`` rebuilt (original line order, blank lines
+    dropped) plus ``lines_removed``; a document whose every line is
+    boilerplate survives with empty text. ``corpus_count`` (table stats)
+    skips the one ``df.count()`` driver action the sourceless
+    ``min_frac`` path otherwise runs.
 
     Shape: hashed line-DF agg (1 shuffle, 8-byte key) -> anti-ish join
     of exploded lines against the flagged set ON THE LINE HASH — line
